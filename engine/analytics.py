@@ -3463,31 +3463,53 @@ def _duck_ivf_ctes(train_limit: int = 0):
     return ",\n".join(parts)
 
 
-_COS_E_CE = ("(aggregate(zip_with(e, ce, (x, y) -> x * y), 0D, "
-             "(acc, v) -> acc + v)) / "
-             "(sqrt(aggregate(transform(e, x -> x * x), 0D, "
-             "(acc, v) -> acc + v)) * "
-             "sqrt(aggregate(transform(ce, x -> x * x), 0D, "
-             "(acc, v) -> acc + v)))")
-_COS_QE_CE = ("(aggregate(zip_with(qe, ce, (x, y) -> x * y), 0D, "
-              "(acc, v) -> acc + v)) / "
-              "(sqrt(aggregate(transform(qe, x -> x * x), 0D, "
-              "(acc, v) -> acc + v)) * "
-              "sqrt(aggregate(transform(ce, x -> x * x), 0D, "
-              "(acc, v) -> acc + v)))")
-_COS_E_QE = ("(aggregate(zip_with(e, qe, (x, y) -> x * y), 0D, "
-             "(acc, v) -> acc + v)) / "
-             "(sqrt(aggregate(transform(e, x -> x * x), 0D, "
-             "(acc, v) -> acc + v)) * "
-             "sqrt(aggregate(transform(qe, x -> x * x), 0D, "
-             "(acc, v) -> acc + v)))")
+def _cos_parts(a: str, b: str):
+    """(dot product, product of norms) of the array columns ``a`` and
+    ``b`` as Spark SQL text."""
+    def norm(v):
+        return (f"sqrt(aggregate(transform({v}, x -> x * x), 0D, "
+                f"(acc, v) -> acc + v))")
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, "
+            f"(acc, v) -> acc + v)", f"{norm(a)} * {norm(b)}")
+
+
+def _cos(a: str, b: str) -> str:
+    return "({}) / ({})".format(*_cos_parts(a, b))
+
+
+_COS_E_CE = _cos("e", "ce")
+_COS_QE_CE = _cos("qe", "ce")
+_COS_E_QE = _cos("e", "qe")
 
 
 # _ivf_assign's argmax key: (round(cos, 6), cell) packed into ONE
 # long — (c_int + 10^6) · 2^42 + (2^42 − 1 − cell).  Bound: cell ids
 # (k-means seed vec_ids) must stay below 2^42 ≈ 4.4·10^12, far past
-# any real corpus; _ivf_fit asserts it on the driver-held seeds.
+# any real corpus; _ivf_fit enforces it on the driver-held seeds.
 _IVF_ENC_BASE = 1 << 42
+# the argmax's cosine: a degenerate pair — a zero-norm vector (ANSI
+# DIVIDE_BY_ZERO on the plain quotient) or a NaN element (a NaN cosine
+# fails the bigint cast with CAST_OVERFLOW) — ranks -2, below every
+# real cosine; a vector with no real cosine takes the smallest cell
+_IVF_COS = "nanvl(coalesce(try_divide({}, {}), -2D), -2D)".format(
+    *_cos_parts("e", "ce"))
+
+
+def _ivf_argmax(pairs):
+    """Per vec_id, the cell of the (vec ``e``, cell ``cell``/``ce``)
+    candidate pair with the highest rounded cosine, ties to the
+    smallest cell, through the packed-long key above.  A -2 cosine
+    makes the key negative, so the cell is decoded with pmod."""
+    c_int = F.expr(f"cast(round(round({_IVF_COS}, 6) * 1000000D, 0) "
+                   f"AS bigint)")
+    enc = ((c_int + F.lit(1000000)) * F.lit(_IVF_ENC_BASE)
+           + (F.lit(_IVF_ENC_BASE - 1) - F.col("cell")))
+    return (pairs.groupBy("vec_id")
+            .agg(F.max(enc).alias("m"))
+            .select("vec_id",
+                    (F.lit(_IVF_ENC_BASE - 1)
+                     - F.pmod(F.col("m"), F.lit(_IVF_ENC_BASE)))
+                    .alias("cell")))
 
 
 def _ivf_assign(emb, cent):
@@ -3506,16 +3528,7 @@ def _ivf_assign(emb, cent):
     round(c6 · 10^6, 0) recovers the 6-dp integer exactly (double
     error ~1e-10 ≪ 0.5) and integer comparisons ≡ the struct form's
     double comparisons."""
-    c_int = F.expr(f"cast(round(round({_COS_E_CE}, 6) * 1000000D, 0) "
-                   f"AS bigint)")
-    enc = ((c_int + F.lit(1000000)) * F.lit(_IVF_ENC_BASE)
-           + (F.lit(_IVF_ENC_BASE - 1) - F.col("cell")))
-    return (emb.crossJoin(F.broadcast(cent))
-            .groupBy("vec_id")
-            .agg(F.max(enc).alias("m"))
-            .select("vec_id",
-                    (F.lit(_IVF_ENC_BASE - 1)
-                     - F.col("m") % F.lit(_IVF_ENC_BASE)).alias("cell")))
+    return _ivf_argmax(emb.crossJoin(F.broadcast(cent)))
 
 
 def _ivf_fit(emb, train_limit: int = 0, k: int = None):
@@ -3557,8 +3570,9 @@ def _ivf_fit(emb, train_limit: int = 0, k: int = None):
                          F.col("e").alias("ce")).collect()]
     # the packed-long argmax (see _ivf_assign) needs cell ids inside
     # [0, 2^42); seeds are vec_ids, checked here on the driver copy
-    assert all(0 <= c < _IVF_ENC_BASE for c, _ in cent_rows), \
-        "IVF seed vec_ids exceed the 2^42 argmax-encoding bound"
+    if not all(0 <= c < _IVF_ENC_BASE for c, _ in cent_rows):
+        raise ValueError(
+            "IVF seed vec_ids exceed the 2^42 argmax-encoding bound")
     for _ in range(_IVF_ITERS):
         cent = spark.createDataFrame(cent_rows, cent_schema)
         assign = _ivf_assign(train, cent)
@@ -5238,15 +5252,5 @@ def _ivf_assign_hier(emb, cent, branch=None):
         "cell long, sup long, ce array<double>")
     # same packed-long argmax as _ivf_assign (HashAggregate, not the
     # struct form's SortAggregate); child cells are seed vec_ids,
-    # covered by the same 2^42 bound _ivf_fit asserts
-    c_int = F.expr(f"cast(round(round({_COS_E_CE}, 6) * 1000000D, 0) "
-                   f"AS bigint)")
-    enc = ((c_int + F.lit(1000000)) * F.lit(_IVF_ENC_BASE)
-           + (F.lit(_IVF_ENC_BASE - 1) - F.col("cell")))
-    return (emb.join(s1, "vec_id")
-            .join(F.broadcast(kids), "sup")
-            .groupBy("vec_id")
-            .agg(F.max(enc).alias("m"))
-            .select("vec_id",
-                    (F.lit(_IVF_ENC_BASE - 1)
-                     - F.col("m") % F.lit(_IVF_ENC_BASE)).alias("cell")))
+    # covered by the same 2^42 bound _ivf_fit enforces
+    return _ivf_argmax(emb.join(s1, "vec_id").join(F.broadcast(kids), "sup"))

@@ -8,46 +8,61 @@ short-circuit priority logic lives INSIDE the kernel where it can skip
 DOM work, which a per-strategy ``when()`` column could not
 (SURVEY.md §4.1).
 
+There is ONE operator, ``extract_turns_multi``, over a set of queries.
+Each turn's text is tokenized and DOM-parsed once and every query's
+ladder runs over the shared tree.  ``extract_turns`` is the same
+operator with one query whose id is None: a None id emits no
+``query_id`` column, so single-query output keeps the results schema.
+
 Scale notes:
 
-* The NL query is parsed ONCE on the driver and captured by the UDF
-  closure (a broadcast-sized struct; SURVEY.md §3.5).
+* Each NL query is parsed ONCE on the driver and captured by the UDF
+  closure (a broadcast-sized struct; SURVEY.md §3.5).  A query that
+  cannot extract (entity-less parse crash, or no entity/attributes)
+  gets one constant envelope on every turn.
 * Rows cross to Python as Arrow record batches
   (``spark.sql.execution.arrow.maxRecordsPerBatch``); all per-row work
   is plain CPU inside the batch — no per-row Python round trips.
-* Turns with no markup at all (no ``<`` and no HTML entity) take a
-  fast path that emits the exact envelope the full ladder would
-  produce for element-free text (the general parser finds no elements
-  → zero results, ``general_parser.py:106-113``), skipping
-  tokenization entirely — at web scale most turns are prose.
-* The operator is a pure row→row map: no shuffle. Partitioning/skew
+* Turns with no markup at all (no ``<`` and no HTML entity) get the
+  exact envelope the full ladder would produce for element-free text
+  (the general parser finds no elements → zero results,
+  ``general_parser.py:106-113``) without tokenization — at web scale
+  most turns are prose.  ``text_nbytes`` is measured JVM-side, so no
+  prose text crosses the Arrow boundary in either mode.
+* Two modes, both one scan of the input:
+  - ``jvm_prose_fast_path=True``: prose turns and non-extracting
+    queries never cross the Arrow boundary.  Their envelopes are
+    constant per query and are stamped JVM-side (a projection for one
+    query, a literal struct array exploded for several); the kernel
+    only sees (markup turn × extractable query).
+  - ``jvm_prose_fast_path=False``: every turn and every query runs
+    inside the one kernel, so the input is scanned exactly once even
+    when the scan is not cached (the pipeline's mode).  Prose turns
+    cross with their text nulled.
+  In both modes the JVM handles the frame alone when no query can
+  extract.
+* The operator is a pure row→row map: no shuffle apart from the
+  optional salted repartition of the kernel's input.  Partitioning/skew
   policy lives in engine/pipeline.py.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator, Optional
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import (StringType, StructField, StructType,
+                               TimestampType)
 
+from engine import dom
 from engine.kernels import constants as C
-from engine.parser import extract_from_root, extract_turn
+from engine.parser import TurnExtraction, extract_from_root, failed
 from engine.query_parse import ParsedQuery, parse_query_hybrid
 from engine.schema import RESULTS_SCHEMA
-
-
-def _no_markup_fast_path(entity: Optional[str]) -> dict:
-    return {
-        "entity": entity,
-        "results": [],
-        "n_results": 0,
-        "message": f"Found 0 {entity} on this page",
-        "strategy": "general",
-        "status": "no_results",
-        "error": None,
-    }
 
 
 def _stringify_results(results):
@@ -61,178 +76,122 @@ def _stringify_results(results):
     return out
 
 
-def extract_turns(df: DataFrame, query: str,
-                  similarity_threshold: float = C.SIMILARITY_THRESHOLD,
-                  matcher_factory=None,
-                  jvm_prose_fast_path: bool = True,
-                  salt_partitions: Optional[int] = None,
-                  salt_block: int = 256) -> DataFrame:
-    """Map a transcripts DataFrame to the results schema for one query.
+def _parse(query: str):
+    """(parsed query, the envelope it gets on EVERY turn when it cannot
+    extract — else None)."""
+    try:
+        parsed = parse_query_hybrid(query)
+    except TypeError as exc:
+        # entity-less queries raise TypeError inside the reference's
+        # big try and surface as the parsing-error envelope (quirk; see
+        # engine/query_parse.extract_entity)
+        message = f"Parsing error: {exc}"
+        return ParsedQuery(), TurnExtraction(None, [], 0, message, "none",
+                                             "parse_error", message)
+    if not parsed.entity or not parsed.attributes:
+        return parsed, TurnExtraction(
+            parsed.entity, [], 0,
+            "Could not extract entity and attributes from query",
+            "none", "bad_query")
+    return parsed, None
 
-    Input must carry (conv_id, turn_idx, role, text); extra columns are
-    dropped (column pruning reaches the scan because the select below
-    is part of the declarative plan).
+
+def _prose(entity: Optional[str]) -> TurnExtraction:
+    return TurnExtraction(entity, [], 0, f"Found 0 {entity} on this page",
+                          "general", "no_results")
+
+
+def _kernel(entries, keyed: bool, passthrough,
+            similarity_threshold: float, matcher_factory):
+    """Arrow kernel over the (row × query) grid of ``entries`` —
+    triples (query_id, parsed query, fixed envelope or None).  Input
+    batches carry the pass-through columns, ``text`` (null for a turn
+    without markup, which gets the prose envelope) and ``text_nbytes``.
+    Output is query-major, so the pass-through columns and
+    ``text_nbytes`` are whole input columns repeated once per query.
 
     ``matcher_factory`` (optional, executor-side ``() -> Matcher``)
     plugs in the semantic tiers; one matcher is built per task so its
     string-pair cache amortizes across the partition — never per row
-    (SURVEY.md §4.1: do not re-encode inside the recursion).
-
-    ``salt_partitions`` (optional) applies the skew-salting
-    repartition on ``(conv_id, turn_idx div salt_block)`` INSIDE this
-    operator, after the prose/markup split — so only markup rows (the
-    CPU-heavy ones) are shuffled and prose rows flow scan→output with
-    no shuffle at all.  Pre-repartitioning the input instead would
-    replay the shuffle once per branch (the plan-check regression this
-    parameter exists to avoid).
-    """
-    # entity-less queries raise TypeError inside the reference's big
-    # try and surface as the parsing-error envelope (quirk; see
-    # engine/query_parse.extract_entity) — at the operator level that
-    # becomes a constant JVM-side envelope for every row, exactly like
-    # bad_query below (the corpus never ships through Python for a
-    # query that can't extract)
-    try:
-        parsed: ParsedQuery = parse_query_hybrid(query)
-        parse_error = None
-    except TypeError as exc:
-        parsed = ParsedQuery()
-        parse_error = f"Parsing error: {exc}"
-    bad_query = parse_error is not None or not parsed.entity \
-        or not parsed.attributes
-    bad_message = parse_error or \
-        "Could not extract entity and attributes from query"
-    bad_status = "parse_error" if parse_error else "bad_query"
-
-    entity = parsed.entity
-    from pyspark.sql import functions as F
-
-    # event-time passthrough keeps streaming aggregations (watermarks
-    # over ts) downstream of the kernel without a stream-stream join
-    has_ts = "ts" in df.columns
+    (SURVEY.md §4.1: do not re-encode inside the recursion)."""
+    k = len(entries)
+    prose = [_prose(parsed.entity) for _, parsed, _ in entries]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         matcher = matcher_factory() if matcher_factory is not None else None
         for batch in batches:
-            out = {
-                "conv_id": batch["conv_id"],
-                "turn_idx": batch["turn_idx"],
-                "role": batch["role"],
-            }
-            if has_ts:
-                out["ts"] = batch["ts"]
             n = len(batch)
-            entities = [None] * n
-            results = [None] * n
-            n_results = [0] * n
-            messages = [None] * n
-            strategies = ["none"] * n
-            statuses = ["bad_query"] * n
-            errors = [None] * n
-            nbytes = [0] * n
-
-            if not bad_query:
-                texts = batch["text"]
-                for i in range(n):
-                    text = texts.iat[i]
-                    if text is None:
-                        text = ""
-                    nbytes[i] = len(text.encode("utf-8", errors="ignore"))
-                    if "<" not in text and "&" not in text:
-                        row = _no_markup_fast_path(entity)
+            grid = [None] * (n * k)
+            for i, text in enumerate(batch["text"].tolist()):
+                root = crash = None
+                if text is not None:    # the JVM nulls prose text
+                    try:
+                        root = dom.parse_html(text)
+                    except Exception as exc:
+                        crash = exc
+                for j, (_, parsed, fixed) in enumerate(entries):
+                    if fixed is not None:
+                        t = fixed
+                    elif crash is not None:
+                        t = failed(parsed.entity, crash)
+                    elif root is None:
+                        t = prose[j]
                     else:
-                        t = extract_turn(text, parsed, similarity_threshold,
-                                         matcher)
-                        row = {
-                            "entity": t.entity,
-                            "results": _stringify_results(t.results),
-                            "n_results": t.n_results, "message": t.message,
-                            "strategy": t.strategy, "status": t.status,
-                            "error": t.error,
-                        }
-                    entities[i] = row["entity"]
-                    results[i] = row["results"]
-                    n_results[i] = row["n_results"]
-                    messages[i] = row["message"]
-                    strategies[i] = row["strategy"]
-                    statuses[i] = row["status"]
-                    errors[i] = row["error"]
-            else:
-                for i in range(n):
-                    messages[i] = bad_message
-                    statuses[i] = bad_status
-                    results[i] = []
+                        t = extract_from_root(root, parsed,
+                                              similarity_threshold, matcher)
+                    grid[j * n + i] = t
 
-            out["entity"] = pd.Series(entities, dtype=object)
-            out["results"] = pd.Series(results, dtype=object)
-            out["n_results"] = pd.Series(n_results, dtype="int32")
-            out["message"] = pd.Series(messages, dtype=object)
-            out["strategy"] = pd.Series(strategies, dtype=object)
-            out["status"] = pd.Series(statuses, dtype=object)
-            out["error"] = pd.Series(errors, dtype=object)
-            out["text_nbytes"] = pd.Series(nbytes, dtype="int64")
+            out = {}
+            if keyed:
+                out["query_id"] = [qid for qid, _, _ in entries
+                                   for _ in range(n)]
+            for c in passthrough:
+                out[c] = pd.concat([batch[c]] * k, ignore_index=True)
+            out["entity"] = pd.Series([t.entity for t in grid], dtype=object)
+            out["results"] = pd.Series(
+                [_stringify_results(t.results) for t in grid], dtype=object)
+            out["n_results"] = pd.Series([t.n_results for t in grid],
+                                         dtype="int32")
+            out["message"] = pd.Series([t.message for t in grid],
+                                       dtype=object)
+            out["strategy"] = pd.Series([t.strategy for t in grid],
+                                        dtype=object)
+            out["status"] = pd.Series([t.status for t in grid], dtype=object)
+            out["error"] = pd.Series([t.error for t in grid], dtype=object)
+            out["text_nbytes"] = pd.concat([batch["text_nbytes"]] * k,
+                                           ignore_index=True)
             yield pd.DataFrame(out)
+    return run
 
-    if has_ts:
-        from pyspark.sql.types import StructField, StructType, TimestampType
-        schema = StructType(
-            RESULTS_SCHEMA.fields[:3]
-            + [StructField("ts", TimestampType(), True)]
-            + RESULTS_SCHEMA.fields[3:])
-        pruned = df.select("conv_id", "turn_idx", "role", "ts", "text")
+
+def _stamp(rows: DataFrame, consts, keyed: bool, passthrough,
+           results_type) -> DataFrame:
+    """Stamp one constant envelope per (row, entry) JVM-side — codegen'd
+    projection, no Python, no shuffle.  ``consts`` holds
+    (query_id, TurnExtraction) pairs; one entry is a plain projection,
+    several explode a literal struct array over the row set (text is
+    dropped before the explode; ``text_nbytes`` is already measured)."""
+    names = ("query_id", "entity", "message", "strategy", "status", "error")
+
+    def lits(qid, t):
+        return [F.lit(v).cast("string").alias(name) for name, v in
+                zip(names, (qid, t.entity, t.message, t.strategy, t.status,
+                            t.error))]
+
+    if len(consts) == 1:
+        val = dict(zip(names, lits(*consts[0])))
     else:
-        schema = RESULTS_SCHEMA
-        pruned = df.select("conv_id", "turn_idx", "role", "text")
-
-    def _salt(d: DataFrame) -> DataFrame:
-        if salt_partitions:
-            return d.repartition(
-                salt_partitions, "conv_id",
-                (F.col("turn_idx") / F.lit(salt_block)).cast("int"))
-        return d
-
-    if bad_query:
-        # degenerate case: every output field is a constant or a JVM
-        # expression — never ship the corpus through Python just to
-        # stamp bad_query envelopes
-        return pruned.select(
-            F.col("conv_id"), F.col("turn_idx"), F.col("role"),
-            *([F.col("ts")] if has_ts else []),
-            F.lit(entity).alias("entity"),
-            F.expr("array()").cast(schema["results"].dataType).alias("results"),
-            F.lit(0).cast("int").alias("n_results"),
-            F.lit(bad_message).alias("message"),
-            F.lit("none").alias("strategy"),
-            F.lit(bad_status).alias("status"),
-            F.lit(parse_error).cast("string").alias("error"),
-            F.coalesce(F.octet_length("text"), F.lit(0)).cast("long")
-             .alias("text_nbytes"))
-
-    if not jvm_prose_fast_path:
-        return _salt(pruned).mapInPandas(run, schema=schema)
-
-    # JVM prose fast path: turns with no markup at all never cross the
-    # Arrow boundary — their (deterministic) envelope is computed with
-    # codegen'd expressions and unioned back.  At transcript scale most
-    # turns are prose, so this removes the bulk of the Python transfer.
-    is_markup = (F.col("text").isNotNull()
-                 & (F.col("text").contains("<") | F.col("text").contains("&")))
-    markup_out = _salt(pruned.filter(is_markup)).mapInPandas(run, schema=schema)
-    prose = pruned.filter(~is_markup)
-    prose_cols = [
-        F.col("conv_id"), F.col("turn_idx"), F.col("role"),
-        *([F.col("ts")] if has_ts else []),
-        F.lit(entity).alias("entity"),
-        F.expr("array()").cast(schema["results"].dataType).alias("results"),
+        rows = rows.select(*passthrough, "text_nbytes", F.explode(F.array(
+            *[F.struct(*lits(qid, t)) for qid, t in consts])).alias("q"))
+        val = {name: F.col(f"q.{name}").alias(name) for name in names}
+    return rows.select(
+        *([val["query_id"]] if keyed else []),
+        *passthrough,
+        val["entity"],
+        F.expr("array()").cast(results_type).alias("results"),
         F.lit(0).cast("int").alias("n_results"),
-        F.lit(f"Found 0 {entity} on this page").alias("message"),
-        F.lit("general").alias("strategy"),
-        F.lit("no_results").alias("status"),
-        F.lit(None).cast("string").alias("error"),
-        F.coalesce(F.octet_length("text"), F.lit(0)).cast("long")
-         .alias("text_nbytes"),
-    ]
-    return markup_out.unionAll(prose.select(*prose_cols))
+        val["message"], val["strategy"], val["status"], val["error"],
+        "text_nbytes")
 
 
 def extract_turns_multi(df: DataFrame, queries: dict,
@@ -243,169 +202,92 @@ def extract_turns_multi(df: DataFrame, queries: dict,
                         salt_block: int = 256) -> DataFrame:
     """Run MANY queries over the corpus in ONE pass.
 
-    ``queries`` maps query_id → NL query string.  Each turn's text is
-    tokenized and DOM-parsed exactly once; every query's strategy
-    ladder then runs over the shared tree — at 100 TB this replaces N
-    scans + N parses with one of each.  Output: one row per
-    (turn, query_id), schema = results schema + leading ``query_id``.
+    ``queries`` maps query_id → NL query string.  Output: one row per
+    (turn, query_id), schema = results schema + leading ``query_id``
+    (plus ``ts`` after ``role`` when the input carries it — event-time
+    passthrough keeps streaming aggregations downstream of the kernel).
+    The one query id None means single-query mode: no ``query_id``
+    column (see ``extract_turns``).
 
-    ``jvm_prose_fast_path`` (default on — VERDICT r2 item 4 closed the
-    gap with single-query mode): rows with no markup at all and
-    queries that cannot extract (parse-error / bad-query) never cross
-    the Arrow boundary.  Their envelopes are CONSTANT per query, so
-    they are stamped JVM-side by exploding a literal per-query struct
-    array over the row set — the Python kernel only ever sees
-    (markup row × extractable query), which at transcript scale is
-    the small minority of the (turn × query) grid.
+    Input must carry (conv_id, turn_idx, role, text); extra columns are
+    dropped (column pruning reaches the scan because the select below
+    is part of the declarative plan).
+
+    ``jvm_prose_fast_path`` picks between the two modes in the module
+    docstring: prose and non-extracting queries stamped JVM-side (a
+    union of branches, each scanning the input), or every turn and
+    query in the one kernel over one scan.
+
+    ``salt_partitions`` (optional) applies the skew-salting
+    repartition on ``(conv_id, turn_idx div salt_block)`` to the
+    kernel's input only — on the fast path that is after the
+    prose/markup split, so prose rows flow scan→output with no shuffle.
+    Pre-repartitioning the input instead would replay the shuffle once
+    per branch (the plan-check regression this parameter exists to
+    avoid).
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType, StructField, StructType
+    keyed = list(queries) != [None]
+    has_ts = "ts" in df.columns
+    passthrough = ["conv_id", "turn_idx", "role"] + (["ts"] if has_ts else [])
+    fields = RESULTS_SCHEMA.fields
+    if has_ts:
+        fields = fields[:3] + [StructField("ts", TimestampType(), True)] \
+            + fields[3:]
+    if keyed:
+        fields = [StructField("query_id", StringType(), False)] + fields
+    schema = StructType(fields)
+    is_markup = (F.col("text").isNotNull()
+                 & (F.col("text").contains("<") | F.col("text").contains("&")))
+    # text_nbytes is measured JVM-side, so no prose text has to cross
+    # into Python in either mode
+    pruned = df.select(*passthrough, "text", F.coalesce(
+        F.octet_length("text"), F.lit(0)).cast("long").alias("text_nbytes"))
 
-    from engine import dom
+    entries = [(qid, *_parse(q)) for qid, q in sorted(queries.items())]
+    if not entries:
+        return df.sparkSession.createDataFrame([], schema)
+    good = [e for e in entries if e[2] is None]
+    bad = [(qid, fixed) for qid, _, fixed in entries if fixed is not None]
 
-    parsed_queries = []
-    for qid, q in sorted(queries.items()):
-        try:
-            parsed_queries.append((qid, parse_query_hybrid(q), None))
-        except TypeError as exc:  # reference entity-less crash quirk
-            parsed_queries.append((qid, ParsedQuery(),
-                                   f"Parsing error: {exc}"))
+    def stamp(rows: DataFrame, consts) -> DataFrame:
+        return _stamp(rows, consts, keyed, passthrough,
+                      schema["results"].dataType)
 
-    schema = StructType([StructField("query_id", StringType(), False)]
-                        + RESULTS_SCHEMA.fields)
-    results_type = schema["results"].dataType
-    pruned = df.select("conv_id", "turn_idx", "role", "text")
-
-    def make_run(qlist):
-        """Arrow kernel over the (row × query) grid for ``qlist``
-        (triples of (qid, parsed, parse_error))."""
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            matcher = matcher_factory() if matcher_factory is not None \
-                else None
-            for batch in batches:
-                rows = {name: [] for name in
-                        ("query_id", "conv_id", "turn_idx", "role", "entity",
-                         "results", "n_results", "message", "strategy",
-                         "status", "error", "text_nbytes")}
-                texts = batch["text"]
-                for i in range(len(batch)):
-                    text = texts.iat[i] or ""
-                    nbytes = len(text.encode("utf-8", errors="ignore"))
-                    markup = "<" in text or "&" in text
-                    root = None
-                    if markup:
-                        try:
-                            root = dom.parse_html(text)
-                        except Exception:
-                            root = None
-                    for qid, parsed, q_parse_error in qlist:
-                        if q_parse_error is not None:
-                            t = {"entity": None, "results": [],
-                                 "n_results": 0,
-                                 "message": q_parse_error,
-                                 "strategy": "none",
-                                 "status": "parse_error",
-                                 "error": q_parse_error}
-                        elif not parsed.entity or not parsed.attributes:
-                            t = {"entity": parsed.entity, "results": [],
-                                 "n_results": 0,
-                                 "message": "Could not extract entity and "
-                                            "attributes from query",
-                                 "strategy": "none", "status": "bad_query",
-                                 "error": None}
-                        elif root is None:
-                            t = _no_markup_fast_path(parsed.entity)
-                        else:
-                            te = extract_from_root(root, parsed,
-                                                   similarity_threshold,
-                                                   matcher)
-                            t = {"entity": te.entity,
-                                 "results": _stringify_results(te.results),
-                                 "n_results": te.n_results,
-                                 "message": te.message,
-                                 "strategy": te.strategy,
-                                 "status": te.status, "error": te.error}
-                        rows["query_id"].append(qid)
-                        rows["conv_id"].append(batch["conv_id"].iat[i])
-                        rows["turn_idx"].append(batch["turn_idx"].iat[i])
-                        rows["role"].append(batch["role"].iat[i])
-                        rows["text_nbytes"].append(nbytes)
-                        for k in ("entity", "results", "n_results", "message",
-                                  "strategy", "status", "error"):
-                            rows[k].append(t[k])
-                out = pd.DataFrame(rows)
-                out["n_results"] = out["n_results"].astype("int32")
-                out["text_nbytes"] = out["text_nbytes"].astype("int64")
-                yield out
-        return run
-
-    def _salt(d: DataFrame) -> DataFrame:
+    def kernel(rows: DataFrame, qlist) -> DataFrame:
         if salt_partitions:
-            return d.repartition(
+            rows = rows.repartition(
                 salt_partitions, "conv_id",
                 (F.col("turn_idx") / F.lit(salt_block)).cast("int"))
-        return d
+        return rows.mapInPandas(
+            _kernel(qlist, keyed, passthrough, similarity_threshold,
+                    matcher_factory), schema=schema)
 
+    if not good:
+        # every output field is a constant or a JVM expression — never
+        # ship the corpus through Python just to stamp failure envelopes
+        return stamp(pruned, bad)
     if not jvm_prose_fast_path:
-        return _salt(pruned).mapInPandas(make_run(parsed_queries),
-                                         schema=schema)
+        # prose rows still pass through the kernel, but with text nulled
+        text = F.when(is_markup, F.col("text"))
+        return kernel(pruned.withColumn("text", text), entries)
 
-    good = [(qid, parsed, None) for qid, parsed, err in parsed_queries
-            if err is None and parsed.entity and parsed.attributes]
-    bad_entries = []
-    for qid, parsed, err in parsed_queries:
-        if err is not None:
-            bad_entries.append((qid, None, err, "none", "parse_error", err))
-        elif not parsed.entity or not parsed.attributes:
-            bad_entries.append((qid, parsed.entity,
-                                "Could not extract entity and attributes "
-                                "from query", "none", "bad_query", None))
-    prose_entries = [
-        (qid, parsed.entity, f"Found 0 {parsed.entity} on this page",
-         "general", "no_results", None)
-        for qid, parsed, _ in good]
+    parts = [kernel(pruned.filter(is_markup), good),
+             stamp(pruned.filter(~is_markup),
+                   [(qid, _prose(parsed.entity)) for qid, parsed, _ in good])]
+    if bad:
+        parts.append(stamp(pruned, bad))
+    return reduce(DataFrame.unionAll, parts)
 
-    def _const_rows(rows: DataFrame, entries) -> DataFrame:
-        """Stamp one constant envelope per (row, entry) JVM-side: a
-        literal struct array exploded over the row set — codegen'd
-        projection, no Python, no shuffle."""
-        arr = F.array(*[F.struct(
-            F.lit(qid).alias("query_id"),
-            F.lit(entity).cast("string").alias("entity"),
-            F.lit(message).cast("string").alias("message"),
-            F.lit(strategy).alias("strategy"),
-            F.lit(status).alias("status"),
-            F.lit(error).cast("string").alias("error"))
-            for (qid, entity, message, strategy, status, error) in entries])
-        return (rows.select(
-            "conv_id", "turn_idx", "role",
-            F.coalesce(F.octet_length("text"), F.lit(0)).cast("long")
-             .alias("text_nbytes"),
-            F.explode(arr).alias("q"))
-            .select(F.col("q.query_id").alias("query_id"),
-                    "conv_id", "turn_idx", "role",
-                    F.col("q.entity").alias("entity"),
-                    F.expr("array()").cast(results_type).alias("results"),
-                    F.lit(0).cast("int").alias("n_results"),
-                    F.col("q.message").alias("message"),
-                    F.col("q.strategy").alias("strategy"),
-                    F.col("q.status").alias("status"),
-                    F.col("q.error").alias("error"),
-                    "text_nbytes"))
 
-    is_markup = (F.col("text").isNotNull()
-                 & (F.col("text").contains("<")
-                    | F.col("text").contains("&")))
-    parts = []
-    if good:
-        parts.append(_salt(pruned.filter(is_markup))
-                     .mapInPandas(make_run(good), schema=schema))
-        parts.append(_const_rows(pruned.filter(~is_markup), prose_entries))
-    if bad_entries:
-        parts.append(_const_rows(pruned, bad_entries))
-    if not parts:
-        return df.sparkSession.createDataFrame([], schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+def extract_turns(df: DataFrame, query: str,
+                  similarity_threshold: float = C.SIMILARITY_THRESHOLD,
+                  matcher_factory=None,
+                  jvm_prose_fast_path: bool = True,
+                  salt_partitions: Optional[int] = None,
+                  salt_block: int = 256) -> DataFrame:
+    """Map a transcripts DataFrame to the results schema for one query:
+    ``extract_turns_multi`` with the single query id None, which emits
+    no ``query_id`` column."""
+    return extract_turns_multi(df, {None: query}, similarity_threshold,
+                               matcher_factory, jvm_prose_fast_path,
+                               salt_partitions, salt_block)

@@ -70,8 +70,7 @@ def extract_turn(text: str, parsed: ParsedQuery,
     try:
         root = dom.parse_html(text)
     except Exception as exc:  # pragma: no cover — parse_html swallows
-        return TurnExtraction(entity, [], 0, f"Parsing error: {exc}",
-                              "none", "parse_error", str(exc))
+        return failed(entity, exc)
 
     return extract_from_root(root, parsed, similarity_threshold, matcher)
 
@@ -117,8 +116,14 @@ def extract_from_root(root, parsed: ParsedQuery,
                               _message(entity, results), "general",
                               "ok" if results else "no_results")
     except Exception as exc:
-        return TurnExtraction(entity, [], 0, f"Parsing error: {exc}",
-                              "none", "parse_error", str(exc))
+        return failed(entity, exc)
+
+
+def failed(entity: Optional[str], exc: Exception) -> TurnExtraction:
+    """The parse_error envelope of a turn whose DOM parse or strategy
+    ladder raised (ref intelligent_parser.py:218-230)."""
+    return TurnExtraction(entity, [], 0, f"Parsing error: {exc}",
+                          "none", "parse_error", str(exc))
 
 
 def get_parser_status(matcher=None, ml_model=None) -> dict:

@@ -9,6 +9,13 @@ Scale design (targets 10^12 turns / 1000 executors; tested local[N]):
   its output is durably written, so a crash between commits re-runs
   only the unfinished buckets (idempotent — output is re-derived, the
   anti-join against lineage prevents duplication).
+* **One operator, one scan** — single- and multi-query jobs both run
+  ``extract_turns_multi`` keyed by query id (None = single query, no
+  ``query_id`` column) with ``jvm_prose_fast_path=False``: every turn
+  and query runs in the one kernel (prose text nulled JVM-side), so
+  each commit group scans its input once.  The only single/multi difference is the key column
+  ``query_id`` in the ordering window, the output partitioning and the
+  lineage read-back.
 * **Salting** — the extraction stage repartitions on
   ``(conv_id, turn_idx div salt_block)`` so one 10^6-turn conversation
   spreads over ~turns/salt_block tasks instead of serializing one
@@ -41,7 +48,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from engine.extract import extract_turns, extract_turns_multi
+from engine.extract import extract_turns_multi
 from engine.matcher import matcher_factory_from_name
 from engine.schema import LINEAGE_SCHEMA
 
@@ -127,9 +134,14 @@ def _config_fingerprint(cfg: JobConfig) -> str:
     return hashlib.md5(payload.encode()).hexdigest()[:8]
 
 
+def _job_queries(cfg: JobConfig) -> dict:
+    """query_id -> NL query.  Single-query mode uses the key None
+    (no query_id output column; lineage rows carry query_id = NULL)."""
+    return cfg.queries or {None: cfg.query}
+
+
 def _query_snapshots(cfg: JobConfig, input_base: str) -> dict:
-    """query_id -> lineage snapshot string.  Single-query mode uses the
-    key None (lineage rows carry query_id = NULL)."""
+    """query_id -> lineage snapshot string."""
     import hashlib
 
     shared = _config_fingerprint(cfg)
@@ -137,10 +149,9 @@ def _query_snapshots(cfg: JobConfig, input_base: str) -> dict:
     def qhash(text: str) -> str:
         return hashlib.md5((text or "").encode()).hexdigest()[:8]
 
-    if cfg.queries:
-        return {qid: f"{input_base}|cfg:{shared}|q:{qid}:{qhash(q)}"
-                for qid, q in cfg.queries.items()}
-    return {None: f"{input_base}|cfg:{shared}|q:{qhash(cfg.query)}"}
+    return {qid: f"{input_base}|cfg:{shared}|q:"
+                 f"{'' if qid is None else f'{qid}:'}{qhash(q)}"
+            for qid, q in _job_queries(cfg).items()}
 
 
 class SnapshotMismatch(RuntimeError):
@@ -220,7 +231,7 @@ def _completed_work(spark: SparkSession, cfg: JobConfig, input_base: str,
     return matched - stale
 
 
-def _write_output(df: DataFrame, cfg: JobConfig) -> None:
+def _write_output(df: DataFrame, cfg: JobConfig, part_cols: list) -> None:
     """Idempotent per-unit write: a crash between a unit's output
     write and its lineage commit means the unit re-runs on resume —
     dynamic partition OVERWRITE replaces exactly the re-run units'
@@ -231,7 +242,6 @@ def _write_output(df: DataFrame, cfg: JobConfig) -> None:
     if cfg.io_format == "iceberg":
         df.writeTo(cfg.output_path).overwritePartitions()
     else:
-        part_cols = ["bucket", "query_id"] if cfg.queries else ["bucket"]
         (df.write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy(*part_cols).parquet(cfg.output_path))
@@ -264,12 +274,17 @@ def run_extraction_job(spark: SparkSession, cfg: JobConfig) -> dict:
     # resume, and adding a query to a finished run computes only the
     # new query (VERDICT r3 item 7).
     snaps = _query_snapshots(cfg, input_base)
+    queries = _job_queries(cfg)
+    # the one single/multi fork: multi-query output carries query_id,
+    # which keys the ordering window, the output partitions and the
+    # lineage read-back
+    qkey = ["query_id"] if cfg.queries else []
 
     done = _completed_work(spark, cfg, input_base, snaps)
     # a bucket's WORK UNIT is the tuple of queries still pending for
-    # it; buckets sharing a pending set run together in one pass (the
-    # multi-query fast path shares their scan + DOM parse), buckets
-    # with different pending sets run in separate passes
+    # it; buckets sharing a pending set run together in one pass (one
+    # scan and one DOM parse per turn shared by the set's queries),
+    # buckets with different pending sets run in separate passes
     units: dict = {}
     for b in range(cfg.n_buckets):
         qs = tuple(qid for qid in snaps if (qid, b) not in done)
@@ -291,39 +306,27 @@ def run_extraction_job(spark: SparkSession, cfg: JobConfig) -> dict:
         t0 = time.time()
         part = df.filter(F.col("bucket").isin(group))
 
-        # skew salting happens INSIDE the operator, after the
-        # prose/markup split: only the CPU-heavy markup rows shuffle;
-        # prose rows flow scan -> output with no shuffle
-        matcher_factory = matcher_factory_from_name(cfg.matcher)
-        if cfg.queries:
-            sub = {qid: cfg.queries[qid] for qid in qs}
-            extracted = extract_turns_multi(part.drop("bucket"), sub,
-                                            cfg.similarity_threshold,
-                                            matcher_factory=matcher_factory,
-                                            salt_partitions=shuffle_n,
-                                            salt_block=cfg.salt_block)
-        else:
-            # jvm_prose_fast_path=False: the two-branch JVM split would
-            # rescan the input once per branch (and per commit group);
-            # inside the pipeline the in-kernel prose skip keeps ONE
-            # scan per group at the cost of Arrow-transferring prose
-            extracted = extract_turns(part.drop("bucket"), cfg.query,
-                                      cfg.similarity_threshold,
-                                      matcher_factory=matcher_factory,
-                                      salt_partitions=shuffle_n,
-                                      salt_block=cfg.salt_block,
-                                      jvm_prose_fast_path=False)
+        # jvm_prose_fast_path=False: the two-branch JVM split would
+        # rescan the input once per branch (and per commit group);
+        # inside the pipeline the in-kernel prose skip keeps ONE scan
+        # per group at the cost of prose rows crossing Arrow with their
+        # text nulled.  Salting happens inside the operator.
+        extracted = extract_turns_multi(
+            part.drop("bucket"), {qid: queries[qid] for qid in qs},
+            cfg.similarity_threshold,
+            matcher_factory=matcher_factory_from_name(cfg.matcher),
+            jvm_prose_fast_path=False, salt_partitions=shuffle_n,
+            salt_block=cfg.salt_block)
         extracted = extracted.withColumn(
             "bucket",
             F.pmod(F.xxhash64("conv_id"), F.lit(cfg.n_buckets)).cast("int"))
 
         # restore stable per-conversation turn order (north rule);
         # in multi-query mode each query's stream orders independently
-        order_keys = ["conv_id", "query_id"] if cfg.queries else ["conv_id"]
-        order = Window.partitionBy(*order_keys).orderBy("turn_idx")
+        order = Window.partitionBy("conv_id", *qkey).orderBy("turn_idx")
         extracted = extracted.withColumn("turn_seq", F.row_number().over(order))
 
-        _write_output(extracted, cfg)
+        _write_output(extracted, cfg, ["bucket", *qkey])
 
         if cfg.fail_before_lineage_group and gi + 1 == cfg.fail_before_lineage_group:
             raise SimulatedFailure(
@@ -335,27 +338,22 @@ def run_extraction_job(spark: SparkSession, cfg: JobConfig) -> dict:
             written = spark.read.table(cfg.output_path)
         else:
             written = spark.read.parquet(cfg.output_path)
-        written = written.filter(F.col("bucket").isin(group))
-        if cfg.queries:
-            # one lineage row per (bucket, query): rows_in is that
-            # query's input-turn count for the bucket, so per query
-            # sum(rows_in) reconciles against the input table
-            written = written.filter(F.col("query_id").isin(list(qs)))
-            stats = written.groupBy("bucket", "query_id").agg(
-                F.count("*").alias("rows_in"),
-                F.sum("n_results").alias("rows_out"),
-                F.sum(F.when(F.col("status") == "parse_error", 1).otherwise(0))
-                 .alias("parse_failures"),
-            ).collect()
-            stat_by_key = {(r.query_id, r.bucket): r for r in stats}
-        else:
-            stats = written.groupBy("bucket").agg(
-                F.count("*").alias("rows_in"),
-                F.sum("n_results").alias("rows_out"),
-                F.sum(F.when(F.col("status") == "parse_error", 1).otherwise(0))
-                 .alias("parse_failures"),
-            ).collect()
-            stat_by_key = {(None, r.bucket): r for r in stats}
+        # one lineage row per (bucket, query): rows_in is that query's
+        # input-turn count for the bucket, so per query sum(rows_in)
+        # reconciles against the input table; the unit's queries prune
+        # the query_id partitions, so finished queries are not re-read
+        keep = F.col("bucket").isin(group)
+        if qkey:
+            keep &= F.col("query_id").isin(list(qs))
+        written = written.filter(keep)
+        stats = written.groupBy("bucket", *qkey).agg(
+            F.count("*").alias("rows_in"),
+            F.sum("n_results").alias("rows_out"),
+            F.sum(F.when(F.col("status") == "parse_error", 1).otherwise(0))
+             .alias("parse_failures"),
+        ).collect()
+        stat_by_key = {(r.asDict().get("query_id"), r.bucket): r
+                       for r in stats}
         wall_ms = int((time.time() - t0) * 1000)
         lineage_rows = []
         for qid in qs:
@@ -382,8 +380,3 @@ def run_extraction_job(spark: SparkSession, cfg: JobConfig) -> dict:
         "buckets_processed": buckets_processed,
         "resumed": len(done) > 0,
     }
-
-
-def read_results(spark: SparkSession, cfg: JobConfig) -> DataFrame:
-    """Results in stable (conv_id, turn_idx) order."""
-    return spark.read.parquet(cfg.output_path).orderBy("conv_id", "turn_idx")

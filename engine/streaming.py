@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.extract import extract_turns
+from engine.extract import extract_turns, extract_turns_multi
 from engine.schema import TRANSCRIPTS_SCHEMA
 
 
@@ -78,21 +78,16 @@ def stream_extract_batched(spark: SparkSession, input_path: str,
     micro-batch's executed-plan string is appended so tests can assert
     the prose rows bypass MapInPandas inside the micro-batch.
 
-    ``queries`` (dict query_id → NL query) switches each micro-batch
-    to the MULTI-QUERY single-pass kernel (extract_turns_multi — one
-    DOM parse per turn shared across all queries, prose/bad-query
-    envelopes stamped JVM-side), completing the matrix: batch/stream ×
-    single/multi all share the same two operators."""
-    from engine.extract import extract_turns_multi
-
+    ``queries`` (dict query_id → NL query) runs every query over each
+    micro-batch in one pass (one DOM parse per turn shared across all
+    queries, prose/bad-query envelopes stamped JVM-side); without it
+    ``query`` runs alone.  Batch/stream × single/multi all share the
+    one operator."""
     stream = read_transcript_stream(spark, input_path)
 
     def _process(batch_df, batch_id):
         batch = batch_df.persist()
-        if queries:
-            extracted = extract_turns_multi(batch, queries)
-        else:
-            extracted = extract_turns(batch, query, jvm_prose_fast_path=True)
+        extracted = extract_turns_multi(batch, queries or {None: query})
         if plan_probe is not None:
             plan_probe.append(
                 extracted._jdf.queryExecution().executedPlan().toString())

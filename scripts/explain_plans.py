@@ -32,7 +32,7 @@ def explain_str(df, mode: str = "formatted") -> str:
 
 
 def main() -> int:
-    from engine.extract import extract_turns
+    from engine.extract import extract_turns, extract_turns_multi
     from engine.queries import _REGISTRY
     import engine.analytics  # noqa: F401
     from engine.session import get_spark
@@ -48,23 +48,35 @@ def main() -> int:
     synth_transcripts(spark, 10, 6).write.mode("overwrite") \
         .parquet("/tmp/explain_transcripts")
     df = spark.read.parquet("/tmp/explain_transcripts")
-    extracted = extract_turns(df, CANONICAL_QUERY, salt_partitions=4,
-                              salt_block=256)
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    final = extracted.withColumn("turn_seq", F.row_number().over(w))
-    plan = explain_str(final)
-    print("=== extraction pipeline ===")
-    print(plan)
+    # single query, and several queries (one crashing: its envelope is
+    # stamped JVM-side) ordered per (conv_id, query_id)
+    multi = {"book": CANONICAL_QUERY,
+             "title": "List book title, price and availability",
+             "crash": "the"}
+    for name, extracted, keys in (
+            ("extraction", extract_turns(df, CANONICAL_QUERY,
+                                         salt_partitions=4, salt_block=256),
+             ["conv_id"]),
+            ("multi-query extraction",
+             extract_turns_multi(df, multi, salt_partitions=4,
+                                 salt_block=256),
+             ["conv_id", "query_id"])):
+        w = Window.partitionBy(*keys).orderBy("turn_idx")
+        final = extracted.withColumn("turn_seq", F.row_number().over(w))
+        plan = explain_str(final)
+        print(f"=== {name} pipeline ===")
+        print(plan)
 
-    n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", plan))
-    if n_exchanges != 2:
-        failures.append(
-            f"extraction plan: expected exactly 2 shuffles (salt on the "
-            f"markup branch + ordering window; prose branch must stay "
-            f"shuffle-free), found {n_exchanges}")
-    for read_schema in re.findall(r"ReadSchema: (.*)", plan):
-        if "tool" in read_schema:
-            failures.append("an extraction scan reads 'tool' — pruning regressed")
+        n_exchanges = len(re.findall(r"\(\d+\) Exchange\b", plan))
+        if n_exchanges != 2:
+            failures.append(
+                f"{name} plan: expected exactly 2 shuffles (salt on the "
+                f"markup branch + ordering window; prose branch must "
+                f"stay shuffle-free), found {n_exchanges}")
+        for read_schema in re.findall(r"ReadSchema: (.*)", plan):
+            if "tool" in read_schema:
+                failures.append(f"a {name} scan reads 'tool' — pruning "
+                                f"regressed")
 
     # --- filter pushdown ---------------------------------------------------
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")

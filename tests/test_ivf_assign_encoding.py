@@ -57,11 +57,39 @@ def test_packed_plan_is_hash_aggregate(spark, emb):
 
 
 def test_seed_bound_asserted(spark, emb):
-    # vec_ids >= 2^42 must refuse the fit loudly, not mis-assign
+    # vec_ids >= 2^42 must refuse the fit loudly (a ValueError, which
+    # python -O cannot strip), not mis-assign
     bad = emb.withColumn(
         "vec_id", F.col("vec_id") + F.lit(A._IVF_ENC_BASE))
-    with pytest.raises(AssertionError, match="2\\^42"):
+    with pytest.raises(ValueError, match="2\\^42"):
         A._ivf_fit(bad)
+
+
+# ---- degenerate embeddings get a defined cell, never an abort ----
+
+_CENT = [(10, [1.0, 0.0]), (11, [0.0, 1.0]), (12, [-1.0, 0.0]),
+         (13, [0.0, -1.0])]
+_DEGENERATE = {"zero_norm": [0.0, 0.0], "nan_element": [float("nan"), 1.0]}
+
+
+@pytest.mark.parametrize("case", sorted(_DEGENERATE))
+@pytest.mark.parametrize("hier", [False, True], ids=["flat", "hier"])
+def test_degenerate_vector_gets_a_defined_cell(spark, case, hier):
+    emb = spark.createDataFrame(
+        [(0, [0.1, 1.0]), (1, _DEGENERATE[case])],
+        "vec_id long, e array<double>")
+    cent = spark.createDataFrame(_CENT, "cell long, ce array<double>")
+    # every cosine of the degenerate vector ranks -2, so it ties
+    # everywhere: the smallest cell (hier: the smallest live
+    # super-cell, then its smallest child)
+    if hier:
+        assign = A._ivf_assign_hier(emb, cent, branch=2)
+        _, sup_of = A._hier_quantizer(_CENT, 2)
+        first = min(sup_of.values())
+        want = min(c for c, g in sup_of.items() if g == first)
+    else:
+        assign, want = A._ivf_assign(emb, cent), 10
+    assert {r.vec_id: r.cell for r in assign.collect()} == {0: 11, 1: want}
 
 
 # ---- dedup_span_exact's packed keeper (same r8 SortAggregate fix) ----

@@ -286,6 +286,13 @@ def test_multi_fast_path_equivalent_and_jvm_side(spark):
     kernel_subtree = plan.split("MapInPandas", 1)[1]
     assert "Filter" in kernel_subtree
 
+    # one-scan mode: every query, good or failing, runs in the ONE
+    # kernel over ONE scan of the input
+    slow_plan = (slow._jdf.queryExecution().executedPlan().toString()
+                 .split("== Initial Plan ==")[0])
+    assert slow_plan.count("MapInPandas") == 1
+    assert slow_plan.count("Range (") == 1
+
 
 def test_multi_fast_path_null_text_and_all_bad_queries(spark):
     from engine.extract import extract_turns_multi
