@@ -551,14 +551,21 @@ def _verify_jaccard(cand, dist, threshold: float = 0.2):
 def _minhash_pairs(dist, cand_filter=None, with_est: bool = False):
     """Band-candidate join + exact-Jaccard verify over the hashed
     shingles; ``cand_filter(colA, colB)`` optionally narrows the
-    candidate pairs (incremental variant).  ``with_est`` additionally
-    carries the signature-agreement estimate (fraction of the k
-    minhash variants agreeing) per pair — computed AT the band join
-    where both signatures are already on the row, so the estimator
-    report needs no signature join-backs (r8).  All carried columns
-    are functions of the pair ids, so the distinct() pair set is
-    exactly the r7 one."""
-    bands = _minhash_bands(dist, carry=True)
+    candidate pairs (incremental variant)."""
+    return _verify_jaccard(
+        _minhash_candidates(_minhash_bands(dist, carry=True), cand_filter,
+                            with_est), dist)
+
+
+def _minhash_candidates(bands, cand_filter=None, with_est: bool = False):
+    """Distinct (doc_a < doc_b, na, nb) candidate pairs of the band
+    self-join over carried band rows (``_minhash_bands(carry=True)``).
+    ``with_est`` additionally carries the signature-agreement estimate
+    (fraction of the k minhash variants agreeing) per pair — computed
+    AT the band join where both signatures are already on the row, so
+    the estimator report needs no signature join-backs (r8).  All
+    carried columns are functions of the pair ids, so the distinct()
+    pair set is exactly the r7 one."""
     a = bands.alias("a")
     b_ = bands.alias("b")
     cond = ((F.col("a.band_id") == F.col("b.band_id"))
@@ -571,13 +578,12 @@ def _minhash_pairs(dist, cand_filter=None, with_est: bool = False):
         agree = sum(F.when(F.col(f"a.s{k}") == F.col(f"b.s{k}"), 1)
                     .otherwise(0) for k in range(_MINHASH_K))
         est_cols = [(agree / float(_MINHASH_K)).alias("est")]
-    cand = (a.join(b_, cond)
+    return (a.join(b_, cond)
             .select(F.col("a.doc_id").alias("doc_a"),
                     F.col("b.doc_id").alias("doc_b"),
                     F.col("a.n").alias("na"), F.col("b.n").alias("nb"),
                     *est_cols)
             .distinct())
-    return _verify_jaccard(cand, dist)
 
 
 _DUCK_MINHASH_INCR = _duck_minhash_sql(
@@ -1228,6 +1234,14 @@ def _simhash128_chunks(docs):
                 for c in range(_SIMHASH128_CHUNKS)]))
 
 
+def _chunk_bands(chunks):
+    """(doc_id, band_id, band_key) band rows of (doc_id, c0..c3)
+    simhash128 chunks: one band per chunk."""
+    return chunks.select("doc_id", F.posexplode(F.array(*[
+        F.col(f"c{c}") for c in range(_SIMHASH128_CHUNKS)]))
+        .alias("band_id", "band_key"))
+
+
 def _simhash128_band_candidates(chunks):
     """Candidate pairs (doc_a < doc_b) whose 128-bit simhashes agree
     on ≥1 of the 4 32-bit chunks — the pigeonhole-complete candidate
@@ -1236,12 +1250,9 @@ def _simhash128_band_candidates(chunks):
     candidate-GENERATOR half of q_simhash128_hamming_candidates,
     shared with the cleaning job's ``sketch="simhash128"`` path."""
     wb = Window.partitionBy("band_id", "band_key").orderBy("doc_id")
-    bands = (chunks.select(
-        "doc_id", F.posexplode(F.array(*[
-            F.col(f"c{c}") for c in range(_SIMHASH128_CHUNKS)]))
-        .alias("band_id", "band_key"))
-        .withColumn("brn", F.row_number().over(wb))
-        .filter(F.col("brn") <= _SIMHASH_BUCKET_CAP).drop("brn"))
+    bands = (_chunk_bands(chunks)
+             .withColumn("brn", F.row_number().over(wb))
+             .filter(F.col("brn") <= _SIMHASH_BUCKET_CAP).drop("brn"))
     a = bands.alias("a")
     b = bands.alias("b")
     return (a.join(b, (F.col("a.band_id") == F.col("b.band_id"))
@@ -2405,6 +2416,18 @@ def _substring_window_md5_expr(min_len: int) -> str:
             f"as binary))))")
 
 
+def _substring_md5_windows(toks, min_len: int):
+    """(doc_id, pos, wkey) window rows of a (doc_id, t token array)
+    frame: ``wkey`` per _substring_window_md5_expr, ``pos`` the
+    window's 0-based start — the streaming operators' window index."""
+    return (toks.filter(F.expr(f"size(t) >= {min_len}"))
+            .select("doc_id", F.posexplode(
+                F.expr(_substring_window_md5_expr(min_len)))
+                .alias("pos", "wkey"))
+            .select("doc_id", F.col("pos").cast("long").alias("pos"),
+                    "wkey"))
+
+
 _DUCK_SUBSTR_CUT = _DUCK_SUBSTR_STARTS + f""", keep AS (
   SELECT w, MIN(ROW(doc_id, pos)) AS k FROM starts GROUP BY w
 ), s2 AS (
@@ -2458,9 +2481,18 @@ def _substring_cut_sets(docs, min_len: int,
     starts subtree a second time (plans/r08) — is a row-local
     comparison."""
     _toks, starts = _substring_dup_starts(docs, min_len, cache_registry)
-    s2 = starts.select("doc_id", "pos",
-                       ((F.col("k.doc_id") == F.col("doc_id"))
-                        & (F.col("k.pos") == F.col("pos"))).alias("is_keep"))
+    return _cut_positions(
+        starts.select("doc_id", "pos",
+                      ((F.col("k.doc_id") == F.col("doc_id"))
+                       & (F.col("k.pos") == F.col("pos"))).alias("is_keep")),
+        min_len)
+
+
+def _cut_positions(s2, min_len: int):
+    """(doc_id, c array<bigint>) cut sets from (doc_id, pos, is_keep)
+    duplicated-window occurrences: the token positions covered by some
+    occurrence and by NO keeper occurrence (overlap protection) — the
+    keeper rule of the batch and the streaming cut."""
     cover = s2.select(
         "doc_id", "is_keep",
         F.explode(F.expr(
@@ -2515,6 +2547,13 @@ def substring_cut_rewrite(docs, min_len: int = _SUBSTR_L,
                 .select("doc_id", "text",
                         F.expr(_SPARK_TOKS).alias("t")))
     cuts = _substring_cut_sets(docs, min_len, cache_registry)
+    return _token_splice(all_toks.join(cuts, "doc_id", "left"))
+
+
+def _token_splice(joined):
+    """Token-join rebuild shared by the batch and streaming token-mode
+    cuts: given (doc_id, text, t, c array<bigint> nullable cut token
+    indices), emit (doc_id, n_tokens, n_cut, text)."""
     rebuilt = (
         "array_join(filter(transform(t, (x, i) -> "
         "IF(array_contains(c, cast(i as bigint)), null, x)), "
@@ -2524,7 +2563,7 @@ def substring_cut_rewrite(docs, min_len: int = _SUBSTR_L,
     # must not lose case/spacing to a stage that cut nothing from
     # it); only docs a cut actually touched get the rebuilt
     # normalized token join
-    return (all_toks.join(cuts, "doc_id", "left")
+    return (joined
             .withColumn("c", F.coalesce(
                 "c", F.expr("array()").cast("array<bigint>")))
             .select("doc_id",
@@ -3480,6 +3519,10 @@ def _cos(a: str, b: str) -> str:
 _COS_E_CE = _cos("e", "ce")
 _COS_QE_CE = _cos("qe", "ce")
 _COS_E_QE = _cos("e", "qe")
+# the semdedup member's centroid cosine: NULL for a zero-norm vector
+# or centroid and for a NaN element, so the member never pairs
+_SEM_CC = "nanvl(try_divide({}, {}), CAST(NULL AS DOUBLE))".format(
+    *_cos_parts("e", "ce"))
 
 
 # _ivf_assign's argmax key: (round(cos, 6), cell) packed into ONE
@@ -4610,7 +4653,7 @@ def semdedup_pairs(emb, k=None, train_limit=_IVF_TRAIN_LIMIT,
     BEFORE the per-removed grouping — the unit the streaming form
     (engine/streaming.stream_semdedup) emits per batch, so
     union-of-batches == this frame is the lossless-decomposition
-    contract (mirroring _stream_neardup_pairs)."""
+    contract (mirroring engine/cleaning.sketch_pairs)."""
     cent, assign = _ivf_fit(emb, train_limit=train_limit, k=k)
     if assign_mode == "hier":
         assign = _ivf_assign_hier(emb, cent)
@@ -4641,7 +4684,7 @@ def _sem_score(emb, cent, assign):
     return (assign.join(emb, "vec_id")
             .join(F.broadcast(cent), "cell")
             .select("vec_id", "cell",
-                    F.round(F.expr(_COS_E_CE), 6).alias("cc"),
+                    F.round(F.expr(_SEM_CC), 6).alias("cc"),
                     F.expr(norm).alias("ne"), "e")
             .withColumn("theta", F.acos("cc")))
 
@@ -4676,9 +4719,10 @@ def _sem_candidate_pairs(scored_a, scored_b, tau, ordered: bool):
             & (F.abs(F.col("th1") - F.col("th2")) <= theta_max))
     cond = cond & ((F.col("v1") < F.col("v2")) if ordered
                    else (F.col("v1") != F.col("v2")))
+    # try_divide: a zero-norm member has a NULL cosine and never pairs
     return (a.join(b, cond)
-            .filter(F.expr(f"({dotab})")
-                    / (F.col("n_a") * F.col("n_b")) >= tau))
+            .filter(F.try_divide(F.expr(dotab),
+                                 F.col("n_a") * F.col("n_b")) >= tau))
 
 
 def _sem_decide(pairs):

@@ -19,11 +19,18 @@ Removal policy: a document is dropped iff it is the LARGER doc_id of
 some confirmed pair, so re-running detection on the survivors finds
 zero pairs (any surviving pair would contradict the removal —
 pinned in tests/test_cleaning_job.py).
+
+Each stage exists once, here: every stream_clean micro-batch
+(engine/streaming.py) runs ``gates``, ``exact_dedup`` and the near-dup
+stage (``neardup_sketch`` → ``sketch_pairs`` → ``drop_pair_members``)
+with a *seen* side — the survivor index of what earlier batches
+shipped — and the batch job is the same chain with an empty one.
 """
 
 from __future__ import annotations
 
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,8 +38,7 @@ from pyspark.sql import functions as F
 from engine.analytics import (_C4_STOP_SQL, _LANG_SETS, _PII_EMAIL,
                               _PII_PHONE, _SPARK_TOKS,
                               _connected_components, _hashed_shingles_df,
-                              _minhash_pairs, dsir_scores, lm2_scores,
-                              lm_scores)
+                              dsir_scores, lm2_scores, lm_scores)
 
 
 def quality_language_gate(docs: DataFrame) -> DataFrame:
@@ -162,17 +168,140 @@ def model_quality_gate(docs: DataFrame, model: str,
     return docs.join(keeps.select("doc_id"), "doc_id", "left_semi")
 
 
-def exact_dedup(docs: DataFrame) -> DataFrame:
-    """Keep the lowest doc_id per exact content hash (one shuffle)."""
-    w_keep = (docs.groupBy(F.md5(F.col("text").cast("binary"))
-                           .alias("content_hash"))
+def gates(docs: DataFrame, gopher_gate: bool = False,
+          decontaminate: DataFrame = None,
+          decontaminate_mode: str = "drop") -> DataFrame:
+    """The document gates of the batch job and of every stream_clean
+    micro-batch: quality/language gate → optional Gopher repetition
+    gate → optional benchmark decontamination against the eval frame
+    ``decontaminate``.  Stateless per document, so a replayed
+    micro-batch gates identically.
+
+    ``decontaminate_mode="drop"`` is a gate (decontaminate_gate):
+    documents sharing any 13-gram with the eval frame never reach the
+    dedup stages.  ``"cut"`` (decontaminate_cut) excises the
+    contaminated spans byte-preservingly and the document SURVIVES;
+    it runs before any dedup, so every downstream content hash /
+    shingle / window sees decontaminated text, and it adds the
+    ``decon_byte_exact`` and ``n_decontaminated_tokens`` lineage
+    columns."""
+    gated = quality_language_gate(docs)
+    if gopher_gate:
+        gated = gopher_repetition_gate(gated)
+    if decontaminate is None:
+        return gated
+    if decontaminate_mode == "cut":
+        from engine.analytics import decontaminate_cut
+        keep_cols = [c for c in gated.columns if c != "text"]
+        rewritten = decontaminate_cut(
+            gated.select("doc_id", "text"), decontaminate)
+        return (gated.select(*keep_cols)
+                .join(rewritten.select(
+                    "doc_id", "text",
+                    F.col("byte_exact").alias("decon_byte_exact"),
+                    F.col("n_cut").alias("n_decontaminated_tokens")),
+                    "doc_id"))
+    if decontaminate_mode == "drop":
+        from engine.analytics import decontaminate_gate
+        return decontaminate_gate(gated, decontaminate)
+    raise ValueError(f"unknown decontaminate mode: {decontaminate_mode!r}")
+
+
+def exact_dedup(docs: DataFrame, seen=()) -> DataFrame:
+    """Keep the lowest doc_id per exact content hash (one shuffle).
+
+    ``seen``: frames of already-shipped ``content_hash`` values (a
+    stream's survivor index); a document whose hash is in any of them
+    is dropped first — one anti-join per frame, so a compacted table
+    bucketed by content_hash is read in place (a union would erase
+    its bucketing).  The batch job passes none."""
+    content_hash = F.md5(F.col("text").cast("binary"))
+    for hashes in seen:
+        docs = docs.join(hashes, content_hash == hashes["content_hash"],
+                         "left_anti")
+    w_keep = (docs.groupBy(content_hash.alias("content_hash"))
               .agg(F.min("doc_id").alias("doc_id")))
     return docs.join(w_keep, "doc_id", "left_semi")
 
 
-def neardup_pairs(docs: DataFrame, sketch: str = "minhash") -> DataFrame:
+def neardup_sketch(docs: DataFrame, sketch: str = "minhash") -> dict:
+    """The sketched form of ``docs`` that the near-dup stage joins and
+    a stream persists as its index: ``dist``, the (doc_id, h) hashed
+    shingles the exact-Jaccard verify reads, plus ``bands`` (MinHash
+    band rows, carrying the signature for the self-join) or
+    ``chunks`` (the 128-bit SimHash chunks c0..c3)."""
+    from engine.analytics import _minhash_bands, _simhash128_chunks
+
+    if sketch == "minhash":
+        dist = _hashed_shingles_df(docs)
+        return {"dist": dist, "bands": _minhash_bands(dist, carry=True)}
+    if sketch == "simhash128":
+        # carry_n: the per-doc shingle count rides the verify base, so
+        # the Jaccard denominator needs no sizes aggregation +
+        # join-backs (r8 — each was a full extra shingle-pipeline
+        # evaluation)
+        return {"chunks": _simhash128_chunks(docs),
+                "dist": _hashed_shingles_df(docs, carry_n=True)}
+    raise ValueError(f"unknown near-dup sketch: {sketch!r}")
+
+
+def sketch_pairs(arriving: dict, seen=()) -> DataFrame:
+    """Confirmed near-dup (doc_a, doc_b, jaccard) pairs with at least
+    one member in ``arriving`` (a neardup_sketch dict): the self-join
+    arm over ``arriving`` ∪ one arriving × seen arm per ``seen``
+    source — the lossless decomposition dedup_minhash_incremental
+    pins (tests/test_incremental_dedup.py): seen × seen pairs were
+    emitted when their later member arrived.
+
+    A seen source is a dict of the same frames, read from a stream's
+    index (``bands`` without the carried signature).  The arms stay
+    separate so a compacted table bucketed by band_key is read in
+    place; its arm keys on the band columns the source carries, so a
+    source read without ``band_id`` joins on the bucket column alone
+    — a superset of candidates that the verify closes.  Every arm
+    feeds the same exact-Jaccard verify, so confirmed pairs are never
+    false."""
+    from engine.analytics import (_chunk_bands, _minhash_candidates,
+                                  _simhash128_band_candidates,
+                                  _verify_jaccard)
+
+    def band_rows(frames):
+        if "chunks" in frames:
+            return _chunk_bands(frames["chunks"])
+        return frames["bands"].select(
+            *[c for c in ("doc_id", "band_id", "band_key")
+              if c in frames["bands"].columns])
+
+    if "chunks" in arriving:
+        cand = _simhash128_band_candidates(arriving["chunks"])
+    else:
+        cand = _minhash_candidates(arriving["bands"])
+    pairs = _verify_jaccard(cand, arriving["dist"])
+    if not seen:
+        return pairs
+    a = band_rows(arriving).alias("a")
+    cross, dist = [], arriving["dist"].select("doc_id", "h")
+    for source in seen:
+        b = band_rows(source)
+        cond = F.col("a.doc_id") != F.col("b.doc_id")
+        for key in ("band_id", "band_key"):
+            if key in b.columns:
+                cond = cond & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+        cross.append(
+            a.join(b.alias("b"), cond)
+            .select(F.least("a.doc_id", "b.doc_id").alias("doc_a"),
+                    F.greatest("a.doc_id", "b.doc_id").alias("doc_b")))
+        dist = dist.unionAll(source["dist"])
+    return pairs.unionAll(_verify_jaccard(
+        reduce(DataFrame.unionAll, cross).distinct(), dist))
+
+
+def neardup_pairs(docs: DataFrame, sketch: str = "minhash",
+                  seen=()) -> DataFrame:
     """Confirmed near-dup pairs (exact Jaccard ≥ 0.2 on 3-gram
-    shingles) with a pluggable CANDIDATE GENERATOR:
+    shingles) of ``docs`` — and, with ``seen`` (see sketch_pairs),
+    between ``docs`` and an indexed corpus — with a pluggable
+    CANDIDATE GENERATOR:
 
     ``sketch="minhash"``: banded MinHash over the shingles — the
     recall-complete-at-θ generator for arbitrary overlap (catches
@@ -189,20 +318,7 @@ def neardup_pairs(docs: DataFrame, sketch: str = "minhash") -> DataFrame:
     pair whose sketches differ widely (e.g. A vs A+B concatenation)
     is NOT a simhash candidate; both generators feed the SAME
     exact-Jaccard verify, so confirmed pairs are never false."""
-    from engine.analytics import (_simhash128_band_candidates,
-                                  _simhash128_chunks, _verify_jaccard)
-
-    if sketch == "minhash":
-        return _minhash_pairs(_hashed_shingles_df(docs))
-    if sketch == "simhash128":
-        cand = _simhash128_band_candidates(_simhash128_chunks(docs))
-        # carry_n: the per-doc shingle count rides the verify base, so
-        # the Jaccard denominator needs no sizes aggregation +
-        # join-backs (r8 — each was a full extra shingle-pipeline
-        # evaluation)
-        return _verify_jaccard(cand,
-                               _hashed_shingles_df(docs, carry_n=True))
-    raise ValueError(f"unknown near-dup sketch: {sketch!r}")
+    return sketch_pairs(neardup_sketch(docs, sketch), seen)
 
 
 def neardup_removal(docs: DataFrame, policy: str = "pairwise",
@@ -221,7 +337,14 @@ def neardup_removal(docs: DataFrame, policy: str = "pairwise",
     document per cluster (the smallest doc_id) — the standard
     production dedup shape; an A~B~C chain collapses to a single
     survivor (tested in tests/test_cleaning_job.py)."""
-    pairs = neardup_pairs(docs, sketch=sketch)
+    return drop_pair_members(docs, neardup_pairs(docs, sketch=sketch),
+                             policy)
+
+
+def drop_pair_members(docs: DataFrame, pairs: DataFrame,
+                      policy: str = "pairwise") -> DataFrame:
+    """``docs`` minus the removal set of confirmed (doc_a < doc_b)
+    pairs under ``policy`` (see neardup_removal)."""
     if policy == "clusters":
         drop = (_connected_components(pairs)
                 .filter(F.col("doc_id") != F.col("cluster_id"))
@@ -355,37 +478,9 @@ def cleaning_stages(docs: DataFrame, neardup_policy: str = "pairwise",
     materializes every cache exactly once and the per-stage metric
     counts are cache reads (plan-asserted in tests/test_cleaning_job.py:
     the counts execute as InMemoryTableScan with no parquet scan)."""
-    gated = quality_language_gate(docs)
-    if gopher_gate:
-        gated = gopher_repetition_gate(gated)
-    if decontaminate is not None:
-        if decontaminate_mode == "cut":
-            # SURGICAL decontamination (decontaminate_cut): the
-            # contaminated spans are excised byte-preservingly and the
-            # document SURVIVES — it runs here, before any dedup, so
-            # every downstream content hash / shingle / window is
-            # computed over decontaminated text; adds the
-            # n_decontaminated_tokens lineage column
-            from engine.analytics import decontaminate_cut
-            keep_cols = [c for c in gated.columns if c != "text"]
-            rewritten = decontaminate_cut(
-                gated.select("doc_id", "text"), decontaminate)
-            gated = (gated.select(*keep_cols)
-                     .join(rewritten.select(
-                         "doc_id", "text",
-                         F.col("byte_exact").alias("decon_byte_exact"),
-                         F.col("n_cut")
-                         .alias("n_decontaminated_tokens")), "doc_id"))
-        elif decontaminate_mode == "drop":
-            # benchmark decontamination as a gate (a drop is a drop):
-            # documents sharing any 13-gram with the eval frame never
-            # reach the dedup stages; its removals land inside the
-            # after_quality_language funnel row
-            from engine.analytics import decontaminate_gate
-            gated = decontaminate_gate(gated, decontaminate)
-        else:
-            raise ValueError(
-                f"unknown decontaminate mode: {decontaminate_mode!r}")
+    # decontamination drops land inside the after_quality_language
+    # funnel row
+    gated = gates(docs, gopher_gate, decontaminate, decontaminate_mode)
     if model_gate:
         # the decon-cut token metric must count cuts on docs the model
         # gate later DROPS too (self-review r7: summing the post-gate

@@ -1,18 +1,25 @@
-"""Persistent BUCKETED near-dup index: the co-located-join form of the
-incremental MinHash dedup.
+"""Persistent index layouts behind the streaming jobs.
 
-``dedup_minhash_incremental`` proves the arriving-vs-indexed
-decomposition; ``stream_dedup_neardup`` runs it as a streaming job
-over plain parquet.  This module is the at-scale storage layout both
-of their docstrings point to: the index's band rows are written as a
-table BUCKETED (and sorted) by ``band_key``, so the candidate join
-between a new batch and a 10^12-row index shuffles ONLY the arriving
-side — Spark reads the bucketed side's files directly into the join
-(its HashPartitioning(band_key) already satisfies the join's
-clustering requirement; plan-asserted in tests/test_bucketed_index.py:
-exactly one Exchange, on the arriving side, and a bucketed scan).
-The shingle table is bucketed by ``doc_id`` the same way for the
-Jaccard-verify join.
+* Near-dup and substring indexes: the streaming jobs
+  (engine/streaming.py) append their survivor state as per-batch
+  parquet dirs — replay-idempotent per-batch overwrites.  The
+  compactions here fold those dirs into tables BUCKETED (and sorted)
+  by the join key — ``band_key`` for bands, ``doc_id`` for the hashed
+  shingles, ``content_hash`` for survivor hashes, ``wkey`` for
+  substring windows — so the candidate, exact-dedup and window joins
+  between a new micro-batch and a 10^12-row index shuffle ONLY the
+  arriving side: Spark reads the bucketed side's files directly into
+  the join (its HashPartitioning already satisfies the join's
+  clustering; plan-asserted in tests/test_bucketed_index.py,
+  tests/test_stream_replay.py and scripts/explain_plans.py: exactly
+  one Exchange, on the arriving side, and a bucketed scan).  The
+  stream reads the table and the uncompacted tail as separate seen
+  sources (engine/streaming._seen); the Jaccard verify unions the
+  shingle table with the tail, which reshuffles it.
+* The IVF serving index: centroids plus the corpus partitioned by
+  cell, grown under the frozen quantizer (``append_to_ann_index``) and
+  compacted with a stream's SemDeDup decision log
+  (``compact_semdedup_stream``).
 
 Bucketing uses the table catalog (``saveAsTable`` — Spark cannot
 attach bucket metadata to a bare path); tables are written as
@@ -23,74 +30,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from engine.analytics import (_hashed_shingles_df, _minhash_bands,
-                              _verify_jaccard)
-
-
-def write_band_index(docs: DataFrame, name: str, path: str,
-                     n_buckets: int = 16) -> None:
-    """Materialize the MinHash index of ``docs`` as two bucketed
-    tables: ``{name}_bands`` (doc_id, band_id, band_key — bucketed by
-    band_key) and ``{name}_dist`` (doc_id, h — bucketed by doc_id).
-
-    ``n_buckets`` fixes the bucket count; at 10^12 rows you would size
-    it so a bucket's files stay executor-memory-friendly (the bucket
-    count, unlike shuffle partitions, is a durable layout choice)."""
-    spark = docs.sparkSession
-    dist = _hashed_shingles_df(docs)
-    bands = _minhash_bands(dist)
-    for tbl in (f"{name}_bands", f"{name}_dist"):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    (bands.write.mode("overwrite")
-     .bucketBy(n_buckets, "band_key").sortBy("band_key")
-     .option("path", f"{path}/bands")
-     .saveAsTable(f"{name}_bands"))
-    (dist.write.mode("overwrite")
-     .bucketBy(n_buckets, "doc_id").sortBy("doc_id")
-     .option("path", f"{path}/dist")
-     .saveAsTable(f"{name}_dist"))
-
-
-def _candidates_vs_index(spark: SparkSession, arriving_bands: DataFrame,
-                         name: str) -> DataFrame:
-    """Candidate pairs (≥1 arriving member) from the banded join of
-    the arriving batch against the bucketed index PLUS the batch
-    itself (arriving×arriving pairs are found here too; the
-    indexed×indexed space is never re-joined — those pairs were
-    emitted when their documents were indexed).
-
-    The join is on ``band_key`` ALONE — the single column the index is
-    bucketed by, which is what lets the planner read the bucketed side
-    in place (a composite (band_id, band_key) key makes it disable the
-    bucketed scan: HashPartitioning(band_key) no longer lines up with
-    the join's clustering).  band_key already encodes both minhashes
-    of its band; a cross-band key coincidence merely adds a candidate
-    pair, which the exact-Jaccard verify filters — candidates are
-    allowed to be a superset."""
-    indexed = spark.table(f"{name}_bands")
-    a = arriving_bands.alias("a")
-    pairs = []
-    for side in (indexed.alias("b"), arriving_bands.alias("b")):
-        pairs.append(
-            a.join(side, (F.col("a.band_key") == F.col("b.band_key"))
-                   & (F.col("a.doc_id") != F.col("b.doc_id")))
-            .select(F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-                    F.greatest("a.doc_id", "b.doc_id").alias("doc_b")))
-    return pairs[0].unionAll(pairs[1]).distinct()
-
-
-def neardup_pairs_vs_index(spark: SparkSession, arriving: DataFrame,
-                           name: str) -> DataFrame:
-    """Confirmed near-dup pairs (Jaccard ≥ 0.2) of an arriving
-    (doc_id, text) batch against the bucketed index ``name`` — the
-    batch-incremental operational query.  The arriving side is
-    shuffled to the index's bucketing; the index is read in place."""
-    dist_arr = _hashed_shingles_df(arriving)
-    cand = _candidates_vs_index(spark, _minhash_bands(dist_arr), name)
-    dist_all = (spark.table(f"{name}_dist").select("doc_id", "h")
-                .unionAll(dist_arr))
-    return _verify_jaccard(cand, dist_all)
 
 
 def compact_stream_index(spark: SparkSession, stream_index_dir: str,
@@ -155,7 +94,7 @@ def compact_substring_index(spark: SparkSession, windows_dir: str,
     the same reasons as the band tables: already-folded batches are
     derived from the table itself, and a replaying batch's own rows
     are excluded by a `batch != id` row filter
-    (engine/streaming._read_index_table).  Rerunning a crashed
+    (engine/streaming._seen).  Rerunning a crashed
     compaction is the idempotent recovery; run between stream
     triggers.
 
@@ -164,9 +103,9 @@ def compact_substring_index(spark: SparkSession, windows_dir: str,
     magnitude bigger than per-doc/per-band rows, so the streaming hot
     loop must not scan it to learn which batches are folded): the
     folded set is read from the partition listing
-    (engine/streaming._folded_batches_from_partitions, catalog
-    metadata only) and the replaying batch's own-row exclusion
-    becomes partition pruning instead of a row filter."""
+    (engine/streaming._folded_batches, catalog metadata only) and the
+    replaying batch's own-row exclusion becomes partition pruning
+    instead of a row filter."""
     wins = (spark.read.parquet(windows_dir)
             .select("doc_id", "pos", "wkey", "batch"))
     spark.sql(f"DROP TABLE IF EXISTS {name}_windows")
@@ -333,29 +272,6 @@ def ann_query_index(spark: SparkSession, path: str, query_vec,
     return (members.select("vec_id", F.expr(cos_expr).alias("cosine"))
             .orderBy(F.round("cosine", 6).desc(), F.col("vec_id"))
             .limit(k))
-
-
-def append_to_index(docs: DataFrame, name: str,
-                    n_buckets: int = 16, batch: int | None = None) -> None:
-    """Fold a processed batch into the index.  The append declares the
-    SAME bucket spec as the table (saveAsTable validates it), so every
-    appended file set is bucketed identically and the co-located join
-    property survives growth.  When the table carries the ``batch``
-    provenance column (compact_stream_index tables), the appended rows
-    get ``batch`` (default -1 = "appended outside the stream")."""
-    spark = docs.sparkSession
-    dist = _hashed_shingles_df(docs)
-    bands = _minhash_bands(dist)
-    if "batch" in spark.table(f"{name}_bands").columns:
-        b = F.lit(-1 if batch is None else batch)
-        bands = bands.withColumn("batch", b)
-        dist = dist.withColumn("batch", b)
-    (bands.write.mode("append")
-     .bucketBy(n_buckets, "band_key").sortBy("band_key")
-     .saveAsTable(f"{name}_bands"))
-    (dist.write.mode("append")
-     .bucketBy(n_buckets, "doc_id").sortBy("doc_id")
-     .saveAsTable(f"{name}_dist"))
 
 
 def compact_semdedup_stream(spark: SparkSession, ann_index_path: str,

@@ -1,10 +1,10 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: opaque binary payloads.
 
-Images/audio/video ride through the pipeline as ``binary`` columns with
-a metadata struct; decode / feature-extract / resize / frame-sample run
-as Arrow-batched ``mapInPandas`` kernels — the same execution shape as
-the HTML extraction kernel (engine/extract.py), so partitioning, skew
-salting and lineage apply unchanged.
+Images/audio/video ride through the pipeline as ``binary`` columns;
+decode / feature-extract run as an Arrow-batched ``mapInPandas``
+kernel — the same execution shape as the HTML extraction kernel
+(engine/extract.py), so partitioning, skew salting and lineage apply
+unchanged.
 
 The actual codecs (PIL/ffmpeg/torchaudio) are NOT present in this
 environment, so the decode step is STUBBED: ``decode_image`` raises
@@ -22,21 +22,9 @@ from typing import Iterator, List, Optional
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType, FloatType, IntegerType, LongType, StringType, StructField,
-    StructType,
+    ArrayType, FloatType, LongType, StringType, StructField, StructType,
 )
-
-MEDIA_META_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("kind", StringType(), False),      # image | audio | video
-    StructField("mime", StringType(), True),
-    StructField("nbytes", LongType(), False),
-    StructField("width", IntegerType(), True),
-    StructField("height", IntegerType(), True),
-    StructField("duration_ms", LongType(), True),
-])
 
 FEATURE_SCHEMA = StructType([
     StructField("media_id", LongType(), False),
@@ -101,88 +89,3 @@ def extract_media_features(df: DataFrame, payload_col: str = "payload",
             })
 
     return df.select(id_col, payload_col).mapInPandas(run, FEATURE_SCHEMA)
-
-
-FRAME_SCHEMA = StructType([
-    StructField("media_id", LongType(), False),
-    StructField("frame_idx", IntegerType(), False),
-    StructField("frame_sha", StringType(), False),
-    StructField("offset_ms", LongType(), False),
-    StructField("status", StringType(), False),
-])
-
-
-def resize_image(payload: bytes, width: int, height: int,
-                 deterministic_fake: bool = False) -> bytes:
-    """Resize an image payload.  Real resize needs an image codec that
-    is not installed here; the deterministic fake returns a
-    content+size-derived byte string so the pipeline shape (binary in,
-    binary out, metadata update) is fully testable."""
-    if not deterministic_fake:
-        raise NotImplementedError(
-            "image codecs (PIL) are not available in this environment; "
-            "pass deterministic_fake=True for the seeded stub")
-    seed = hashlib.sha256(payload + f":{width}x{height}".encode()).digest()
-    return seed * (max(width * height // len(seed), 1))
-
-
-def sample_frames(df: DataFrame, every_ms: int = 1000,
-                  payload_col: str = "payload", id_col: str = "media_id",
-                  deterministic_fake: bool = False) -> DataFrame:
-    """Frame sampling over a binary video column: one output row per
-    sampled frame — the row-explosion shape a real decoder produces.
-
-    Real demuxing needs ffmpeg (absent here); the deterministic fake
-    derives the frame count from the payload size (1 frame per 256
-    bytes, capped at 16) and each frame's hash from (content, index),
-    so partitioning, the 1→N row fan-out and downstream joins are all
-    real and tested.  Decode-unavailable rows surface as a single
-    status row, never a task failure."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "frame_idx", "frame_sha",
-                                   "offset_ms", "status")}
-            for media_id, payload in zip(batch[id_col], batch[payload_col]):
-                p = bytes(payload) if payload is not None else b""
-                if not deterministic_fake:
-                    out["media_id"].append(media_id)
-                    out["frame_idx"].append(0)
-                    out["frame_sha"].append("")
-                    out["offset_ms"].append(0)
-                    out["status"].append("decode_unavailable")
-                    continue
-                n_frames = min(max(len(p) // 256, 1), 16)
-                for i in range(n_frames):
-                    out["media_id"].append(media_id)
-                    out["frame_idx"].append(i)
-                    out["frame_sha"].append(
-                        hashlib.sha256(p + f":{i}".encode()).hexdigest())
-                    out["offset_ms"].append(i * every_ms)
-                    out["status"].append("ok")
-            yield pd.DataFrame({
-                "media_id": pd.Series(out["media_id"], dtype="int64"),
-                "frame_idx": pd.Series(out["frame_idx"], dtype="int32"),
-                "frame_sha": out["frame_sha"],
-                "offset_ms": pd.Series(out["offset_ms"], dtype="int64"),
-                "status": out["status"],
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(run, FRAME_SCHEMA)
-
-
-def attach_media_metadata(df: DataFrame, payload_col: str = "payload",
-                          kind: str = "image",
-                          mime: str = "application/octet-stream") -> DataFrame:
-    """JVM-side typed metadata struct (MEDIA_META_SCHEMA fields) for
-    opaque payloads — no Python involved.  Dimensions/duration stay
-    NULL until a real decoder fills them (decode is stubbed here)."""
-    return df.withColumn("meta", F.struct(
-        F.col("media_id").cast("long").alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.lit(mime).alias("mime"),
-        F.octet_length(F.col(payload_col)).cast("long").alias("nbytes"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    ))

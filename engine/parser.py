@@ -126,18 +126,6 @@ def failed(entity: Optional[str], exc: Exception) -> TurnExtraction:
                           "none", "parse_error", str(exc))
 
 
-def get_parser_status(matcher=None, ml_model=None) -> dict:
-    """O3 — component status report (ref intelligent_parser.py:232-253),
-    reflecting which pluggable tiers are active in this configuration."""
-    similarity = matcher is not None
-    return {
-        "query_parser": {"rule_based": True, "ml_fallback": ml_model is not None},
-        "json_script_parser": {"available": True, "similarity_matching": similarity},
-        "table_parser": {"available": True, "similarity_matching": similarity},
-        "general_parser": {"available": True, "similarity_matching": similarity},
-    }
-
-
 def parse(html: str, query: str, full_ml: bool = False,
           matcher=None, ml_model=None) -> dict:
     """Reference-shaped response envelope for one page (ref :56-230).

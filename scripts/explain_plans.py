@@ -8,7 +8,10 @@ the scale-critical properties hold:
 * the extraction stage has NO shuffle other than the explicit salted
   repartition; the ordering window adds exactly one;
 * small-side joins are broadcast (BroadcastHashJoin in the fuzzy
-  theta-join).
+  theta-join);
+* the default cleaning job's write plan is node for node the pinned
+  one, and a stream_clean micro-batch against a compacted index reads
+  the bucketed tables with no Exchange between scan and join.
 
 Run: python scripts/explain_plans.py  (prints plans; exits non-zero on
 a violated property).
@@ -18,6 +21,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -26,9 +30,74 @@ from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 
+# the default run_cleaning_job write plan over the benchmark's
+# articles (formatted-mode node names in order; 14 of them Exchange):
+# the batch cleaning plan, pinned so a change to the shared stages
+# cannot move it unnoticed
+_ARTICLES = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "perfbench", "data", "articles.parquet")
+_CLEANING_NODES = """
+InMemoryTableScan InMemoryRelation InMemoryTableScan
+InMemoryRelation InMemoryTableScan InMemoryRelation Scan
+ColumnarToRow Filter TableCacheQueryStage Filter
+InMemoryTableScan InMemoryRelation TableCacheQueryStage Project
+HashAggregate Exchange ShuffleQueryStage AQEShuffleRead
+HashAggregate Filter BroadcastExchange BroadcastQueryStage
+BroadcastHashJoin ResultQueryStage Filter Project HashAggregate
+Exchange HashAggregate Filter BroadcastExchange
+BroadcastHashJoin AdaptiveSparkPlan Exchange Sort
+InMemoryTableScan InMemoryRelation Filter Exchange Project
+Generate Project HashAggregate Exchange HashAggregate
+HashAggregate Exchange HashAggregate Generate Filter
+InMemoryTableScan InMemoryRelation Filter Exchange Project
+Generate Project HashAggregate Exchange HashAggregate
+HashAggregate Exchange HashAggregate Generate Filter
+BroadcastExchange BroadcastHashJoin Project HashAggregate
+HashAggregate InMemoryTableScan InMemoryRelation Filter Exchange
+Project Generate Filter Project HashAggregate Exchange
+HashAggregate BroadcastExchange BroadcastHashJoin Project
+InMemoryTableScan InMemoryRelation Filter Exchange Project
+Generate Filter Project HashAggregate Exchange HashAggregate
+BroadcastExchange BroadcastHashJoin Project HashAggregate
+HashAggregate Filter Project HashAggregate Exchange
+HashAggregate Sort SortMergeJoin AdaptiveSparkPlan Project
+AdaptiveSparkPlan
+""".split()
+
+
 def explain_str(df, mode: str = "formatted") -> str:
     jvm = df.sparkSession._jvm
     return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), mode)
+
+
+def _joins_above_index_scans(df, table_prefix: str) -> list:
+    """(scan, nodes between it and its join) for every bucketed scan
+    of a ``table_prefix`` table in ``df``'s physical plan, walking
+    through AQE and cached (InMemoryRelation) subplans."""
+    out = []
+
+    def walk(node, path):
+        name = node.nodeName()
+        if name.startswith("Scan") and table_prefix in name \
+                and "Bucketed: true" in node.toString():
+            between = []
+            for above in reversed(path):
+                if "Join" in above:
+                    break
+                between.append(above)
+            out.append((name, between))
+        if name == "AdaptiveSparkPlan":
+            kids = [node.executedPlan()]
+        elif name == "InMemoryTableScan":
+            kids = [node.relation().cachedPlan()]
+        else:
+            seq = node.children()
+            kids = [seq.apply(k) for k in range(seq.size())]
+        for kid in kids:
+            walk(kid, path + [name])
+
+    walk(df._jdf.queryExecution().executedPlan(), [])
+    return out
 
 
 def main() -> int:
@@ -206,6 +275,58 @@ def main() -> int:
     pplan = explain_str(parse_pdf_turns(pdf_in))
     if re.search(r"\(\d+\) Exchange\b", pplan):
         failures.append("parse_pdf_turns: shuffle in a pure row map")
+
+    # --- cleaning: the batch job's write plan, and a bucketed micro-batch
+    from engine.cleaning import cleaning_stages, exact_dedup, neardup_pairs
+    from engine.index import compact_stream_index
+    from engine.streaming import _clean_one_batch, _neardup_seen, _seen
+
+    docs = spark.read.parquet(_ARTICLES).select("doc_id", "text")
+    stages = cleaning_stages(docs)
+    cplan = explain_str(stages["cleaned"])
+    print("=== cleaning job write plan ===")
+    print(cplan)
+    nodes = re.findall(r"^\(\d+\) (\w+)", cplan, re.M)
+    if nodes != _CLEANING_NODES or nodes.count("Exchange") != 14:
+        failures.append(f"cleaning job plan moved: nodes {nodes}")
+    for name in ("gated", "exact", "survivors"):
+        stages[name].unpersist()
+
+    # a stream_clean micro-batch against a compacted index: its
+    # exact-dedup and near-dup candidate joins, built by the calls
+    # _clean_one_batch makes, read the hashes and bands tables in place
+    # (the Jaccard verify unions the dist table with the tail, so that
+    # one is reshuffled)
+    work = "/tmp/explain_stream_clean"
+    shutil.rmtree(work, ignore_errors=True)
+    old_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        _clean_one_batch(spark, docs.filter(F.col("doc_id") % 2 == 0), 0,
+                         work)
+        compact_stream_index(spark, f"{work}/index", "explain_cln",
+                             f"{work}/bidx")
+        arriving = docs.filter(F.col("doc_id") % 2 == 1)
+        hashes, _ = _seen(spark, f"{work}/index", 1,
+                          {"hashes": ["content_hash"]}, "explain_cln")
+        joins = {
+            "exact dedup": exact_dedup(arriving, seen=[hashes["hashes"]]),
+            "near-dup pairs": neardup_pairs(arriving, seen=_neardup_seen(
+                spark, f"{work}/index", 1, "minhash", "explain_cln"))}
+        for (what, jdf), table in zip(joins.items(), ("hashes", "bands")):
+            print(f"=== bucketed stream_clean micro-batch: {what} ===")
+            print(jdf._jdf.queryExecution().executedPlan().toString())
+            scans = _joins_above_index_scans(jdf, f"explain_cln_{table}")
+            if not scans:
+                failures.append(f"bucketed micro-batch {what}: no "
+                                f"bucketed index scan")
+            for scan, between in scans:
+                if "Exchange" in between:
+                    failures.append(f"bucketed micro-batch {what}: "
+                                    f"Exchange between {scan} and its "
+                                    f"join: {between}")
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
 
     print("\n=== checks ===")
     if failures:

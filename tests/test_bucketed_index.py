@@ -1,16 +1,18 @@
 """Bucketed near-dup index (engine/index.py): the candidate join
-against the persisted index must shuffle ONLY the arriving side (the
+against the compacted index must shuffle ONLY the arriving side (the
 bucketed table is read in place — the co-located-join layout the
-incremental dedup docstrings prescribe), and the incremental query
-over the index must reproduce the in-memory incremental semantics."""
+incremental dedup docstrings prescribe), and the near-dup stage run
+against the compacted index as its seen side must reproduce the
+in-memory incremental semantics."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from engine.analytics import (_hashed_shingles_df, _minhash_bands,
                               _minhash_pairs)
-from engine.index import (append_to_index, neardup_pairs_vs_index,
-                          write_band_index)
+from engine.cleaning import neardup_pairs
+from engine.index import compact_stream_index
+from engine.streaming import _neardup_one_batch, _neardup_seen
 
 SF = "/root/testdata/sf0.001"
 
@@ -26,19 +28,29 @@ def no_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def _compacted(spark, tmp_path, docs, name):
+    """Index ``docs`` as stream batch 0 and compact it into the
+    bucketed tables ``{name}_bands`` / ``{name}_dist``; returns the
+    stream index dir."""
+    idx = str(tmp_path / f"{name}_sidx")
+    _neardup_one_batch(spark, docs, 0, idx, str(tmp_path / f"{name}_p"))
+    compact_stream_index(spark, idx, name, str(tmp_path / f"{name}_b"))
+    return idx
+
+
 def test_bucketed_index_matches_incremental_semantics(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet") \
         .select("doc_id", "text")
     indexed = docs.filter(F.col("doc_id") % 2 == 0)
     arriving = docs.filter(F.col("doc_id") % 2 == 1)
 
-    write_band_index(indexed, "t_idx", str(tmp_path / "idx"))
+    idx = _compacted(spark, tmp_path, indexed, "t_idx")
+    seen = _neardup_seen(spark, idx, 1, "minhash", "t_idx")
     got = {(r.doc_a, r.doc_b, r.jaccard)
-           for r in neardup_pairs_vs_index(spark, arriving, "t_idx")
-           .collect()}
+           for r in neardup_pairs(arriving, seen=seen).collect()}
 
     # ground truth: the full-batch pairs restricted to >=1 odd member
-    # (the dedup_minhash_incremental decomposition).  The index join
+    # (the dedup_minhash_incremental decomposition).  The table arm
     # keys on band_key alone (bucketing), so its candidate set is a
     # SUPERSET of the (band_id, band_key) candidates — every verified
     # pair it adds is a true >=0.2-Jaccard pair the stricter banding
@@ -56,8 +68,8 @@ def test_bucketed_candidate_join_shuffles_only_arriving_side(
         spark, tmp_path, no_broadcast):
     docs = spark.read.parquet(f"{SF}/documents.parquet") \
         .select("doc_id", "text")
-    write_band_index(docs.filter(F.col("doc_id") % 2 == 0),
-                     "t_plan", str(tmp_path / "idx"))
+    _compacted(spark, tmp_path, docs.filter(F.col("doc_id") % 2 == 0),
+               "t_plan")
 
     arr_bands = _minhash_bands(_hashed_shingles_df(
         docs.filter(F.col("doc_id") % 2 == 1)))
@@ -85,9 +97,9 @@ def test_bucketed_candidate_join_shuffles_only_arriving_side(
 def test_compact_stream_index_to_bucketed_tables(spark, tmp_path):
     """The ingest → compact split: the streaming near-dup job builds
     its replay-idempotent per-batch parquet index; compaction folds it
-    into the bucketed tables, after which querying the bucketed index
-    finds the same cross-batch pair the streaming job found."""
-    from engine.index import compact_stream_index
+    into the bucketed tables, after which the near-dup stage against
+    the bucketed index finds the same cross-batch pair the streaming
+    job found."""
     from engine.streaming import stream_dedup_neardup
     from tests.test_streaming_neardup import _DOCS_1, _DOCS_2, _write
 
@@ -101,9 +113,9 @@ def test_compact_stream_index_to_bucketed_tables(spark, tmp_path):
 
     compact_stream_index(spark, idx, "t_cmp", str(tmp_path / "bidx"))
     arriving = spark.createDataFrame(_DOCS_2, "doc_id long, text string")
+    seen = _neardup_seen(spark, idx, 1, "minhash", "t_cmp")
     got = {(r.doc_a, r.doc_b)
-           for r in neardup_pairs_vs_index(spark, arriving, "t_cmp")
-           .collect()}
+           for r in neardup_pairs(arriving, seen=seen).collect()}
     assert got == {(1, 6)}  # doc 6 is the near-dup of indexed doc 1
     plan = (spark.table("t_cmp_bands").groupBy("band_key").count()
             ._jdf.queryExecution().executedPlan().toString())
@@ -112,6 +124,9 @@ def test_compact_stream_index_to_bucketed_tables(spark, tmp_path):
 
 def test_bucketed_index_append_keeps_layout_and_catches_late_dup(
         spark, tmp_path, no_broadcast):
+    """The index grows by appended per-batch dirs that a re-compaction
+    folds into the bucketed tables: the layout survives the growth
+    and a late near-dup of the first batch is still caught."""
     base = spark.createDataFrame(
         [(1, "the quick brown fox jumps over a lazy dog while the sun "
              "sets on the quiet valley and the river runs north")],
@@ -127,17 +142,19 @@ def test_bucketed_index_append_keeps_layout_and_catches_late_dup(
              "the mill")],
         "doc_id long, text string")
 
-    write_band_index(base, "t_app", str(tmp_path / "idx"))
-    assert neardup_pairs_vs_index(spark, batch2, "t_app").count() == 0
-    append_to_index(batch2, "t_app")
+    idx = _compacted(spark, tmp_path, base, "t_app")
+    pairs = str(tmp_path / "t_app_p")
+    _neardup_one_batch(spark, batch2, 1, idx, pairs, bucketed_name="t_app")
+    assert spark.read.parquet(f"{pairs}/batch=1").count() == 0
+    compact_stream_index(spark, idx, "t_app", str(tmp_path / "t_app_b2"))
 
-    pairs = {(r.doc_a, r.doc_b)
-             for r in neardup_pairs_vs_index(spark, batch3, "t_app")
-             .collect()}
-    assert pairs == {(1, 3)}
-    # appended files kept the bucket layout: a bucket-key aggregation
-    # over the table still runs exchange-free on the bucketed scan
-    # (a bare scan would not engage bucketing at all)
+    _neardup_one_batch(spark, batch3, 2, idx, pairs, bucketed_name="t_app")
+    got = {(r.doc_a, r.doc_b)
+           for r in spark.read.parquet(f"{pairs}/batch=2").collect()}
+    assert got == {(1, 3)}
+    # the re-compacted files kept the bucket layout: a bucket-key
+    # aggregation over the table still runs exchange-free on the
+    # bucketed scan (a bare scan would not engage bucketing at all)
     plan = (spark.table("t_app_bands").groupBy("band_key").count()
             ._jdf.queryExecution().executedPlan().toString())
     assert "Bucketed: true" in plan, plan

@@ -47,55 +47,3 @@ def test_decode_unavailable_is_the_default(spark):
     out = extract_media_features(df).collect()
     assert all(r.status == "decode_unavailable" for r in out)
     assert all(r.features is None for r in out)
-
-
-def test_metadata_struct(spark):
-    from engine.multimodal import attach_media_metadata
-    row = attach_media_metadata(_media_df(spark, 1), kind="image",
-                                mime="image/png").collect()[0]
-    assert row.meta.kind == "image" and row.meta.mime == "image/png"
-    assert row.meta.nbytes == len(b"payload-0")
-    assert row.meta.width is None and row.meta.duration_ms is None
-
-
-def test_resize_stub_contract():
-    import pytest
-
-    from engine.multimodal import resize_image
-
-    with pytest.raises(NotImplementedError):
-        resize_image(b"img-bytes", 64, 64)
-    a = resize_image(b"img-bytes", 64, 64, deterministic_fake=True)
-    b = resize_image(b"img-bytes", 64, 64, deterministic_fake=True)
-    c = resize_image(b"img-bytes", 32, 32, deterministic_fake=True)
-    assert a == b and a != c and isinstance(a, bytes) and len(a) > 0
-
-
-def test_sample_frames_fanout(spark):
-    from pyspark.sql import Row
-
-    from engine.multimodal import sample_frames
-
-    rows = [
-        Row(media_id=1, payload=bytearray(b"v" * 1000)),   # 3 frames
-        Row(media_id=2, payload=bytearray(b"w" * 100)),    # 1 frame (floor→min 1)
-        Row(media_id=3, payload=None),                     # empty → 1 frame
-    ]
-    df = spark.createDataFrame(rows)
-    out = sample_frames(df, every_ms=500, deterministic_fake=True).collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r.media_id, []).append(r)
-    assert len(by_id[1]) == 3
-    assert [r.offset_ms for r in sorted(by_id[1], key=lambda r: r.frame_idx)] \
-        == [0, 500, 1000]
-    assert len(by_id[2]) == 1 and len(by_id[3]) == 1
-    assert all(r.status == "ok" and len(r.frame_sha) == 64 for r in out)
-    # frame hashes are content+index derived → distinct per frame
-    shas = [r.frame_sha for r in out]
-    assert len(set(shas)) == len(shas)
-
-    # decode-unavailable mode: one status row per input, no failures
-    out2 = sample_frames(df, deterministic_fake=False).collect()
-    assert len(out2) == 3
-    assert all(r.status == "decode_unavailable" for r in out2)

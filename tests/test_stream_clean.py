@@ -428,6 +428,11 @@ def test_stream_clean_decontaminate_modes(spark, tmp_path):
     hashes = {r.doc_id: r.content_hash for r in
               spark.read.parquet(f"{wc}/index/hashes").collect()}
     assert hashes[2] == hashlib.md5(rows[2].encode()).hexdigest()
+    # the funnel row counts the excised tokens, as the batch job's
+    # decontaminated_tokens_cut metric does; drop mode has no such column
+    assert spark.read.parquet(f"{wc}/metrics/batch=1") \
+        .first().decontaminated_tokens_cut == 20
+    assert "decontaminated_tokens_cut" not in m1.asDict()
 
     # replay: identical rewrite
     _clean_one_batch(spark, b1, 1, wc, decontaminate_path=bench_path,

@@ -1,9 +1,10 @@
 """Structured Streaming tests: incremental extraction with checkpoint
-resume, and the watermarked monitoring aggregation."""
+resume and exactly-once after a mid-stream crash, and a row-map
+operator running unchanged on a stream."""
 
 from pyspark.sql import functions as F
 
-from engine.streaming import stream_extract, stream_metrics
+from engine.streaming import stream_extract
 from engine.synth import CANONICAL_QUERY, synth_transcripts
 
 
@@ -35,140 +36,6 @@ def test_stream_extract_incremental_with_checkpoint(spark, tmp_path):
     assert total.count() == 60 + 30
     # no row processed twice
     assert total.select("conv_id", "turn_idx").distinct().count() == 90
-
-
-def test_stream_extract_batched_fast_path(spark, tmp_path):
-    """foreachBatch extraction with the JVM prose fast path: output
-    must equal the in-kernel-skip streaming path, each micro-batch's
-    plan must show ONE markup-gated MapInPandas with both union
-    branches reading the persisted micro-batch (InMemoryTableScan) —
-    i.e. the prose rows bypass Arrow and the files are read once —
-    and a checkpointed re-drain stays incremental."""
-    from engine.streaming import stream_extract_batched
-
-    inp = str(tmp_path / "in")
-    out_a = str(tmp_path / "out_a")
-    out_b = str(tmp_path / "out_b")
-
-    _write_batch(spark, inp, 10)
-
-    plans: list = []
-    q = stream_extract_batched(spark, inp, out_a, str(tmp_path / "cp_a"),
-                               CANONICAL_QUERY, plan_probe=plans)
-    q.awaitTermination(120)
-    q2 = stream_extract(spark, inp, out_b, str(tmp_path / "cp_b"),
-                        CANONICAL_QUERY)
-    q2.awaitTermination(120)
-
-    cols = ["conv_id", "turn_idx", "status", "n_results", "message"]
-    a = sorted(map(tuple, spark.read.parquet(out_a).select(*cols).collect()))
-    b = sorted(map(tuple, spark.read.parquet(out_b).select(*cols).collect()))
-    assert a == b and len(a) == 60
-
-    assert plans, "plan probe captured nothing"
-    for plan in plans:
-        assert plan.count("MapInPandas") == 1
-        assert "Union" in plan
-        # both branches read the persisted micro-batch, not the files
-        assert plan.count("InMemoryTableScan") >= 2
-        assert "FileScan" not in plan.split("InMemoryRelation")[0]
-
-    # incremental re-drain against the same checkpoint
-    _write_batch(spark, inp, 5, offset=1)
-    q3 = stream_extract_batched(spark, inp, out_a, str(tmp_path / "cp_a"),
-                                CANONICAL_QUERY)
-    q3.awaitTermination(120)
-    total = spark.read.parquet(out_a)
-    assert total.count() == 90
-    assert total.select("conv_id", "turn_idx").distinct().count() == 90
-
-
-def test_stream_extract_multi_query(spark, tmp_path):
-    """Multi-query streaming: each micro-batch runs the single-pass
-    multi-query kernel; the drained output equals the BATCH multi-query
-    result over the same input at the (query, conv, turn) grain."""
-    from engine.extract import extract_turns_multi
-    from engine.streaming import stream_extract_batched
-    from tests.test_multi_query import QUERIES
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    _write_batch(spark, inp, 8)
-    qs = {"a": CANONICAL_QUERY, "b": QUERIES["q_title"]}
-
-    q = stream_extract_batched(spark, inp, out, str(tmp_path / "cp"),
-                               queries=qs)
-    q.awaitTermination(120)
-
-    cols = ["query_id", "conv_id", "turn_idx", "status", "n_results"]
-    got = sorted(map(tuple, spark.read.parquet(out)
-                 .select(*cols).collect()))
-    want = sorted(map(tuple,
-                      extract_turns_multi(spark.read.parquet(inp), qs)
-                      .select(*cols).collect()))
-    assert got == want and len(got) == 48 * 2
-
-
-def test_stateful_conversation_progress_resumes_across_restarts(spark, tmp_path):
-    """applyInPandasWithState: per-conversation counters accumulate
-    across micro-batches AND across restarts (state store in the
-    checkpoint)."""
-    from engine.streaming import stream_conversation_progress
-
-    inp = str(tmp_path / "in")
-    cp = str(tmp_path / "cp")
-    out = str(tmp_path / "out")
-
-    def sink(batch_df, batch_id):
-        (batch_df.withColumn("emit_seq", F.lit(batch_id))
-         .write.mode("append").parquet(out))
-
-    def run_once():
-        prog = stream_conversation_progress(spark, inp, CANONICAL_QUERY)
-        q = (prog.writeStream.foreachBatch(sink)
-             .outputMode("update").option("checkpointLocation", cp)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        rows = spark.read.parquet(out).collect()
-        latest = {}
-        for r in rows:
-            if r.conv_id not in latest or r.emit_seq > latest[r.conv_id].emit_seq:
-                latest[r.conv_id] = r
-        return latest
-
-    _write_batch(spark, inp, 6)  # 6 convs × 6 turns
-    first = run_once()
-    assert all(r.n_turns == 6 for r in first.values())
-    assert all(r.max_turn_idx == 5 for r in first.values())
-
-    # append MORE turns for the same conversations: restart against the
-    # same checkpoint; the state must resume, not reset
-    df = synth_transcripts(spark, n_conversations=6, turns_per_conv=6,
-                           shuffled=False)
-    df = df.withColumn("turn_idx", F.col("turn_idx") + 6)
-    df.coalesce(2).write.mode("append").parquet(inp)
-
-    second = run_once()
-    assert all(r.n_turns == 12 for r in second.values())
-    assert all(r.max_turn_idx == 11 for r in second.values())
-
-
-def test_stream_metrics_windowed(spark, tmp_path):
-    inp = str(tmp_path / "in")
-    _write_batch(spark, inp, 8)
-    agg = stream_metrics(spark, inp, CANONICAL_QUERY, window="10 minutes")
-    q = (agg.writeStream.format("memory").queryName("m")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "cp2"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM m").collect()
-    # append mode only emits windows the watermark has closed; with a
-    # bounded input the final windows stay open, so assert the schema
-    # and that nothing crashed rather than exact counts
-    assert {"window", "turns", "records", "parse_failures"} <= \
-        set(spark.table("m").columns)
-    assert all(r.parse_failures == 0 for r in rows)
 
 
 def test_boilerplate_strip_composes_with_streaming(spark, tmp_path):
@@ -247,107 +114,3 @@ def test_stream_extract_exactly_once_after_midstream_crash(spark, tmp_path):
     assert final.count() == 72  # 4 appends × 3 convs × 6 turns
     assert final.select("conv_id", "turn_idx").distinct().count() == 72
     assert final.filter(F.col("status") == "parse_error").count() == 0
-
-
-def test_stream_dedup_exact_drops_late_copies_and_resumes(spark, tmp_path):
-    """Watermarked streaming dedup: duplicate contents arriving in a
-    LATER micro-batch are dropped against the checkpointed state, and
-    a restart resumes that state instead of re-admitting copies."""
-    import datetime
-
-    from engine.streaming import stream_dedup_exact
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    cp = str(tmp_path / "cp")
-    ts = datetime.datetime(2026, 1, 1, 12, 0, 0)
-
-    def rows(texts, conv):
-        return spark.createDataFrame(
-            [(conv, i, "assistant", t, None, ts)
-             for i, t in enumerate(texts)],
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp")
-
-    def drain():
-        q = (stream_dedup_exact(spark, inp)
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", cp)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    first = [f"unique document number {i}" for i in range(10)]
-    rows(first, "c0").coalesce(1).write.mode("append").parquet(inp)
-    drain()
-    assert spark.read.parquet(out).count() == 10
-
-    # a re-delivered copy of all 10 plus 3 genuinely new texts, in a
-    # NEW streaming run against the same checkpoint (state must resume)
-    rows(first + [f"fresh document {i}" for i in range(3)], "c1") \
-        .coalesce(1).write.mode("append").parquet(inp)
-    drain()
-    total = spark.read.parquet(out)
-    assert total.count() == 13  # 10 re-delivered copies all dropped
-    assert total.select("content_hash").distinct().count() == 13
-
-
-def test_stream_dedup_state_is_watermark_bounded(spark, tmp_path):
-    """The half a global-dedup test cannot see: state for a content
-    hash is EVICTED once the watermark passes its horizon, so a copy
-    arriving much later is re-admitted (at-least-once across horizons)
-    — proving the operator keeps bounded state rather than every hash
-    forever.  Timeline (watermark delay 1h):
-
-      drain 1: original at 12:00          → state expires at 13:00
-      drain 2: unrelated row at 22:00     → watermark advances to
-               21:00 > 13:00 → the original's state is evicted
-      drain 3: byte-identical copy at 22:00 → ADMITTED (state gone);
-               a second copy in the same drain is still dropped
-               (exactly-once within the new horizon)
-    """
-    import datetime
-
-    from engine.streaming import stream_dedup_exact
-
-    inp = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    cp = str(tmp_path / "cp")
-    t0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
-    late = t0 + datetime.timedelta(hours=10)
-
-    def rows(specs, conv):
-        return spark.createDataFrame(
-            [(conv, i, "assistant", t, None, when)
-             for i, (t, when) in enumerate(specs)],
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp")
-
-    def drain():
-        q = (stream_dedup_exact(spark, inp)
-             .writeStream.format("parquet").option("path", out)
-             .option("checkpointLocation", cp)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-
-    rows([("the original document", t0)], "c0") \
-        .coalesce(1).write.mode("append").parquet(inp)
-    drain()
-    assert spark.read.parquet(out).count() == 1
-
-    # advances the watermark past the original's 13:00 expiry
-    rows([("an unrelated heartbeat", late)], "c1") \
-        .coalesce(1).write.mode("append").parquet(inp)
-    drain()
-    assert spark.read.parquet(out).count() == 2
-
-    # same content re-delivered after the horizon: state was evicted,
-    # so ONE copy lands; its duplicate within the same horizon is still
-    # dropped
-    rows([("the original document", late),
-          ("the original document", late)], "c2") \
-        .coalesce(1).write.mode("append").parquet(inp)
-    drain()
-    final = spark.read.parquet(out)
-    assert final.count() == 3
-    assert final.filter(F.col("text") == "the original document") \
-                .count() == 2  # original + one post-eviction re-admit
