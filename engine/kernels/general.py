@@ -44,9 +44,9 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Tuple
 
-from engine.dom import Node
+from engine.dom import Node, unwrap_all
 from engine.kernels import constants as C
 from engine.kernels import structures
 from engine.matcher import Matcher
@@ -106,8 +106,7 @@ def get_element_text(element: Optional[Node]) -> Optional[str]:
 
 def unwrap_text_property_tags(root: Node) -> None:
     """G1 — flatten b/h1-6/strong/i/em/u/small/mark/abbr/cite."""
-    for tag in root.find_all(C.TEXT_PROPERTY_TAGS):
-        tag.unwrap()
+    unwrap_all(root.find_all(C.TEXT_PROPERTY_TAGS))
 
 
 # ---------------------------------------------------------------------------
@@ -153,7 +152,7 @@ def find_by_exact_match(container: Node, attribute: str) -> Optional[AttributeDa
     BEFORE their own attributes are checked — replicated verbatim."""
     attr_lower = attribute.lower()
     for tag in container.find_all(recursive=False):
-        if tag.name in C.CONTAINER_TAGS and tag.find_all(recursive=False):
+        if tag.name in C.CONTAINER_TAGS and tag.has_child_elements():
             result = find_by_exact_match(tag, attribute)
             if result:
                 result.path_chain.insert(0, TagIdentifier.from_element(tag))
@@ -319,7 +318,7 @@ def find_by_similarity(container: Node, attribute: str, matcher: Matcher,
     best_idx, similarity_score = matcher.best_match(attribute, candidates)
     best_element_tag = elements[best_idx]
 
-    if best_element_tag.name in C.CONTAINER_TAGS and best_element_tag.find_all(recursive=False):
+    if best_element_tag.name in C.CONTAINER_TAGS and best_element_tag.has_child_elements():
         if similarity_score >= threshold:
             result = find_by_similarity(best_element_tag, attribute, matcher,
                                         threshold, depth - 1)
@@ -339,7 +338,7 @@ def find_by_similarity(container: Node, attribute: str, matcher: Matcher,
             if id(element) in evaluated:
                 continue
             evaluated.add(id(element))
-            if element.name in C.CONTAINER_TAGS and element.find_all(recursive=False):
+            if element.name in C.CONTAINER_TAGS and element.has_child_elements():
                 res = find_by_similarity(element, attribute, matcher,
                                          threshold, depth - 1)
                 if res and (res.score > highest_score or result is None):
@@ -380,17 +379,26 @@ def _most_matched(candidates: List[Node], attrs: Dict[str, object]) -> Optional[
     return best
 
 
+def chain_steps(path_chain: List[TagIdentifier]) -> List[Tuple[str, Dict[str, object]]]:
+    """G6 — a path chain as the (tag name, attributes to match) steps the
+    replay uses: value-bearing attribute keys are removed from matching."""
+    return [(tag_id.tag_name,
+             {k: v for k, v in tag_id.attributes.items()
+              if k not in C.ATTRIBUTES_MAY_CONTAIN_VALUES})
+            for tag_id in path_chain]
+
+
 def find_value_using_path_chain(attribute: str, container: Node,
-                                path_chain: List[TagIdentifier]) -> Optional[AttributeData]:
-    """G6 — replay a compiled path on a sibling container (ref :363-458)."""
+                                path_chain: List[TagIdentifier],
+                                steps: List[Tuple[str, Dict[str, object]]]
+                                ) -> Optional[AttributeData]:
+    """G6 — replay a compiled path on a sibling container (ref :363-458).
+    ``steps`` is ``chain_steps(path_chain)``, built once per chain."""
     current: Optional[Node] = container
-    for tag_id in path_chain:
+    for tag_name, match_attrs in steps:
         if current is None:
             return None
-        match_attrs = {k: v for k, v in tag_id.attributes.items()
-                       if k not in C.ATTRIBUTES_MAY_CONTAIN_VALUES}
-
-        if tag_id.tag_name == "img":
+        if tag_name == "img":
             img_tags = current.find_all("img")
             if img_tags:
                 if len(img_tags) == 1:
@@ -403,9 +411,9 @@ def find_value_using_path_chain(attribute: str, container: Node,
                 return None
         else:
             if len(match_attrs) == 0:
-                current = current.find(tag_id.tag_name, recursive=False)
+                current = current.find(tag_name, recursive=False)
             else:
-                found = current.find_all(tag_id.tag_name, attrs=match_attrs,
+                found = current.find_all(tag_name, attrs=match_attrs,
                                          recursive=False)
                 if found:
                     current = _most_matched(found, match_attrs) if len(found) > 1 else found[0]
@@ -443,15 +451,16 @@ def find_value_using_path_chain(attribute: str, container: Node,
 
 def extract_attributes_from_container(
         container: Node, attributes: List[str],
-        path_chains: Optional[Dict[str, List[TagIdentifier]]] = None,
+        path_chains: Optional[Dict[str, tuple]] = None,
         matcher: Optional[Matcher] = None,
         threshold: float = C.SIMILARITY_THRESHOLD,
 ) -> Dict[str, Optional[AttributeData]]:
-    """Ref :326-361 — replay mode only visits attrs present in the map."""
+    """Ref :326-361 — replay mode only visits attrs present in the map,
+    which holds ``(path_chain, chain_steps(path_chain))`` per attr."""
     result: Dict[str, Optional[AttributeData]] = {}
     if path_chains is not None:
-        for attr, chain in path_chains.items():
-            value = find_value_using_path_chain(attr, container, chain)
+        for attr, (chain, steps) in path_chains.items():
+            value = find_value_using_path_chain(attr, container, chain, steps)
             if value is not None:
                 value.attribute_name = attr
                 result[attr] = value
@@ -537,8 +546,8 @@ def parse_from_repeated_structures(root: Node, attributes: List[str],
 
     containers = container_groups[most_promising]
     first_attrs = first_extracts.get(most_promising, {})
-    chains = {attr: value.path_chain for attr, value in first_attrs.items()
-              if value is not None}
+    chains = {attr: (value.path_chain, chain_steps(value.path_chain))
+              for attr, value in first_attrs.items() if value is not None}
 
     results: List[Dict[str, Optional[str]]] = []
     for i, container in enumerate(containers):

@@ -34,14 +34,12 @@ from engine.matcher import Matcher
 
 def find_json_scripts(root: Node) -> List[Node]:
     """J1 — collect JSON-bearing script tags, deduping __NEXT_DATA__ by
-    id.  One tree walk (the reference scans three times); the three
-    collection orders are preserved."""
+    id.  One read of the root's tag index (the reference scans three
+    times); the three collection orders are preserved."""
     ld_json: List[Node] = []
     app_json: List[Node] = []
     next_data: List[Node] = []
-    for el in root.iter_elements(recursive=True):
-        if el.name != "script":
-            continue
+    for el in root.find_all("script"):
         stype = el.attrs.get("type")
         if stype == "application/ld+json":
             ld_json.append(el)

@@ -32,27 +32,20 @@ _GROUPED_TAGS = ("div", "span", "article", "section")
 def find_repeated_structures(root: Node) -> List[List[Node]]:
     """G2 — candidate container groups, largest group first.
 
-    Single tree walk; the reference walks the tree once per tag name
-    plus once for lists (5 walks).  Ordering semantics are preserved
-    exactly: per-class member lists receive all divs (document order),
-    then all spans, etc. — the insertion order the reference's
-    per-tag-name loops produce, which matters because the final sort
-    is stable and ties break on it."""
-    by_tag: Dict[str, List[Node]] = {t: [] for t in _GROUPED_TAGS}
-    lists: List[Node] = []
-    for el in root.iter_elements(recursive=True):
-        if el.name in by_tag and "class" in el.attrs:
-            by_tag[el.name].append(el)
-        elif el.name in ("ul", "ol"):
-            lists.append(el)
-
+    Reads the root's tag index once per tag name, as the reference
+    walks the tree once per tag name plus once for lists.  Ordering
+    semantics are preserved exactly: per-class member lists receive all
+    divs (document order), then all spans, etc. — the insertion order
+    the reference's per-tag-name loops produce, which matters because
+    the final sort is stable and ties break on it."""
     elements_by_class: Dict[str, List[Node]] = {}
     for tag_name in _GROUPED_TAGS:
-        for element in by_tag[tag_name]:
-            class_name = " ".join(element.get("class", []))
-            elements_by_class.setdefault(class_name, []).append(element)
+        for element in root.find_all(tag_name):
+            if "class" in element.attrs:
+                class_name = " ".join(element.attrs["class"])
+                elements_by_class.setdefault(class_name, []).append(element)
 
-    for list_element in lists:
+    for list_element in root.find_all(("ul", "ol")):
         list_items = list_element.find_all("li")
         class_name = " ".join(list_element.get("class", []))
         elements_by_class.setdefault(class_name, []).extend(list_items)

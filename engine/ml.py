@@ -29,7 +29,7 @@ from __future__ import annotations
 import re
 from typing import Dict, List, Optional, Protocol, Tuple
 
-from engine.dom import Node, parse_html
+from engine.dom import Node, parse_html, unwrap_all
 from engine.kernels import constants as C
 from engine.kernels import structures
 
@@ -183,9 +183,8 @@ def ml_parse_html(html: str, query: str, attributes: List[str],
         root = parse_html(html)
         # ML variant unwraps only attribute-less text-property tags
         # (ref :75-78) — different from the rule path's blanket unwrap
-        for tag in root.find_all(C.TEXT_PROPERTY_TAGS):
-            if len(tag.attrs) == 0:
-                tag.unwrap()
+        unwrap_all([tag for tag in root.find_all(C.TEXT_PROPERTY_TAGS)
+                    if len(tag.attrs) == 0])
 
         container_groups = structures.find_repeated_structures(root)
         filled: Dict[int, int] = {}

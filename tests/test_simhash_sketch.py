@@ -71,8 +71,8 @@ def test_stream_clean_simhash128_catches_cross_batch_neardup(
         spark, tmp_path):
     """The chunk index persists survivors' simhash chunks; a
     near-identical copy in a later batch is dropped against it, and a
-    replay rewrites the batch identically (the _stream_index_tail
-    exclusion covers the chunks dir too)."""
+    replay rewrites the batch identically (the ``batch != batch_id``
+    exclusion of engine/streaming._seen covers the chunks dir too)."""
     work = str(tmp_path / "work")
     b0 = spark.createDataFrame(_DOCS_1, "doc_id long, text string")
     _clean_one_batch(spark, b0, 0, work, sketch="simhash128")

@@ -4,7 +4,7 @@ The crash window: foreachBatch writes batch N's index partitions, then
 the process dies BEFORE the checkpoint commit.  On restart Spark
 replays batch N — whose own rows are now already in the index.  The
 fixed jobs exclude ``batch = N`` from every index read
-(engine/streaming._stream_index_tail), so the replay sees exactly the
+(engine/streaming._seen), so the replay sees exactly the
 pre-batch state and rewrites its partitions identically.
 
 These tests drive the module-level per-batch functions directly (the
@@ -197,8 +197,8 @@ def test_replay_after_crash_window_compaction(spark, tmp_path):
     via the bucketed TABLES, not the per-batch tail — pre-fix,
     stream_clean anti-joined the batch against itself (cleaned/batch=N
     rewritten empty) and the near-dup verify double-counted shingles.
-    The table reads now filter `batch != batch_id`
-    (engine/streaming._read_index_table), so the replay is
+    The index reads now filter `batch != batch_id`
+    (engine/streaming._seen), so the replay is
     byte-identical."""
     from engine.index import compact_stream_index
 
