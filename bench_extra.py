@@ -4,6 +4,9 @@
 optimization loop can time ONE query at a time through the same
 methodology (warmup at a tiny SF, timed at the target SF, noop sink,
 clearCache between runs) and dump its ``explain("formatted")`` plan.
+Kept because it is the per-query interleaved A/B tool (run it from a
+parent checkout and the change in turn, min of ≥ 3 per side) until a
+per-node profiler replaces it.
 
 Usage:
   python bench_extra.py q1 q2 ...            # time the named queries

@@ -230,7 +230,7 @@ def neardup_sketch(docs: DataFrame, sketch: str = "minhash") -> dict:
     shingles the exact-Jaccard verify reads, plus ``bands`` (MinHash
     band rows, carrying the signature for the self-join) or
     ``chunks`` (the 128-bit SimHash chunks c0..c3)."""
-    from engine.analytics import _minhash_bands, _simhash128_chunks
+    from engine.analytics import _minhash_bands, _simhash_chunks
 
     if sketch == "minhash":
         dist = _hashed_shingles_df(docs)
@@ -240,7 +240,7 @@ def neardup_sketch(docs: DataFrame, sketch: str = "minhash") -> dict:
         # the Jaccard denominator needs no sizes aggregation +
         # join-backs (r8 — each was a full extra shingle-pipeline
         # evaluation)
-        return {"chunks": _simhash128_chunks(docs),
+        return {"chunks": _simhash_chunks(docs, 128),
                 "dist": _hashed_shingles_df(docs, carry_n=True)}
     raise ValueError(f"unknown near-dup sketch: {sketch!r}")
 
@@ -261,8 +261,8 @@ def sketch_pairs(arriving: dict, seen=()) -> DataFrame:
     — a superset of candidates that the verify closes.  Every arm
     feeds the same exact-Jaccard verify, so confirmed pairs are never
     false."""
-    from engine.analytics import (_chunk_bands, _minhash_candidates,
-                                  _simhash128_band_candidates,
+    from engine.analytics import (_band_join, _chunk_bands,
+                                  _chunk_candidates, _minhash_candidates,
                                   _verify_jaccard)
 
     def band_rows(frames):
@@ -273,24 +273,21 @@ def sketch_pairs(arriving: dict, seen=()) -> DataFrame:
               if c in frames["bands"].columns])
 
     if "chunks" in arriving:
-        cand = _simhash128_band_candidates(arriving["chunks"])
+        cand = _chunk_candidates(arriving["chunks"])
     else:
         cand = _minhash_candidates(arriving["bands"])
     pairs = _verify_jaccard(cand, arriving["dist"])
     if not seen:
         return pairs
-    a = band_rows(arriving).alias("a")
+    a = band_rows(arriving)
     cross, dist = [], arriving["dist"].select("doc_id", "h")
     for source in seen:
         b = band_rows(source)
-        cond = F.col("a.doc_id") != F.col("b.doc_id")
-        for key in ("band_id", "band_key"):
-            if key in b.columns:
-                cond = cond & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+        keys = [k for k in ("band_id", "band_key") if k in b.columns]
         cross.append(
-            a.join(b.alias("b"), cond)
-            .select(F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-                    F.greatest("a.doc_id", "b.doc_id").alias("doc_b")))
+            _band_join(a, b, keys, cmp="!=", distinct=False)
+            .select(F.least("doc_a", "doc_b").alias("doc_a"),
+                    F.greatest("doc_a", "doc_b").alias("doc_b")))
         dist = dist.unionAll(source["dist"])
     return pairs.unionAll(_verify_jaccard(
         reduce(DataFrame.unionAll, cross).distinct(), dist))
@@ -308,7 +305,7 @@ def neardup_pairs(docs: DataFrame, sketch: str = "minhash",
     e.g. a doc that contains another).
 
     ``sketch="simhash128"``: 32-bit-chunk buckets of the 128-bit
-    SimHash (``_simhash128_band_candidates``) — candidates are pairs
+    SimHash (``_chunk_candidates``) — candidates are pairs
     whose TOKEN-SET sketches agree on ≥1 chunk, i.e. near-IDENTICAL
     documents (small edits, boilerplate re-crawls: Hamming ≤ 3
     guaranteed, ≤ 6 best-effort).  Measured absolutely faster than
@@ -386,18 +383,10 @@ def semantic_dedup_removal(docs: DataFrame, emb: DataFrame,
 
     emb_alive = emb.join(docs.select(F.col("doc_id").alias("vec_id")),
                          "vec_id", "left_semi")
-    pairs = semdedup_pairs(emb_alive)
-    if policy == "clusters":
-        drop = (_connected_components(
-                    pairs.select(F.col("removed_id").alias("doc_a"),
-                                 F.col("keeper_id").alias("doc_b")))
-                .filter(F.col("doc_id") != F.col("cluster_id"))
-                .select("doc_id"))
-    elif policy == "pairwise":
-        drop = pairs.select(F.col("removed_id").alias("doc_id")).distinct()
-    else:
-        raise ValueError(f"unknown semantic-dedup policy: {policy!r}")
-    return docs.join(drop, "doc_id", "left_anti")
+    # the removed member plays doc_b, the one "pairwise" drops
+    pairs = semdedup_pairs(emb_alive).select(
+        F.col("keeper_id").alias("doc_a"), F.col("removed_id").alias("doc_b"))
+    return drop_pair_members(docs, pairs, policy)
 
 
 def substring_cut_stage(docs: DataFrame,

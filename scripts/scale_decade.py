@@ -158,24 +158,21 @@ def main() -> None:
     # centroid keeps the bounded fit non-degenerate).
     from engine.analytics import (_planted_embeddings, semdedup_removals,
                                   _IVF_K)
-    for name, d, k, mode in (
-            (("semdedup_k16_base", base_dir, _IVF_K, "flat"),
-             ("semdedup_k16_10x", SCALE_DIR, _IVF_K, "flat"),
-             ("semdedup_k_prop_n_10x", SCALE_DIR, _IVF_K * COPIES,
-              "flat"),
-             ("semdedup_k_prop_n_hier_10x", SCALE_DIR,
-              _IVF_K * COPIES, "hier")) if "semdedup" in sections
-            else ()):
+    for name, d, k in (
+            (("semdedup_k16_base", base_dir, _IVF_K),
+             ("semdedup_k16_10x", SCALE_DIR, _IVF_K),
+             ("semdedup_k_prop_n_10x", SCALE_DIR, _IVF_K * COPIES))
+            if "semdedup" in sections else ()):
         spark.catalog.clearCache()
         emb, _off = _planted_embeddings(spark, d)
         t0 = time.time()
-        df = semdedup_removals(emb, k=k, train_limit=max(200, 10 * k),
-                               assign_mode=mode).persist()
+        df = semdedup_removals(emb, k=k,
+                               train_limit=max(200, 10 * k)).persist()
         df.write.mode("overwrite").format("noop").save()
         wall = time.time() - t0
         rows = df.count()  # cache read, not a pipeline recompute
         df.unpersist()
-        rec = {"query": name, "k": k, "mode": mode,
+        rec = {"query": name, "k": k,
                "wall": round(wall, 2), "rows": rows}
         results.append(rec)
         print(json.dumps(rec))

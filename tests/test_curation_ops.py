@@ -344,36 +344,6 @@ def test_lm2_sees_bigram_structure_unigrams_cannot(spark):
     assert rows[1].n_tokens == 48 and rows[2].n_tokens == 48
 
 
-def test_semdedup_hier_assignment_recovers_plants(spark):
-    """The two-level coarse quantizer (O(n·√k) assignment) must not
-    lose plant recovery: near-identical vectors take the same
-    super→child path, so every planted pair stays co-located; the
-    removal set matches the flat assignment's on this corpus."""
-    emb, off = A._planted_embeddings(spark, SF)
-    flat = {tuple(sorted((r.removed_id, r.keeper_id))) for r in
-            A.semdedup_removals(emb).collect()}
-    hier_rows = A.semdedup_removals(emb, assign_mode="hier").collect()
-    hier = {tuple(sorted((r.removed_id, r.keeper_id)))
-            for r in hier_rows}
-    plants = {r.vec_id for r in
-              spark.read.parquet(f"{SF}/embeddings.parquet").collect()
-              if r.vec_id % 10 == 0}
-    # flat assignment recovers every planted pair; hier is the
-    # documented approximation — a pair can split at a SUPER-cell
-    # boundary exactly like the flat method's cell boundary (here:
-    # 49/50, the one loss is vec 340 whose +0.01 perturbation flips
-    # the stage-1 argmax).  Pairs are compared UNORDERED because the
-    # removal orientation legitimately flips where the hier cell's
-    # centroid differs (SemDeDup removes the member closer to ITS
-    # cell centroid).
-    truth = {(v, v + off) for v in plants}
-    assert flat == truth
-    assert hier <= truth                       # no false pairs
-    assert len(hier) >= 0.95 * len(truth)      # boundary losses only
-    for r in hier_rows:
-        assert abs(r.removed_id - r.keeper_id) == off
-
-
 def test_lm2_bigram_lg_survives_web_scale_counts(spark):
     """VERDICT r5 item 5: the r5 single-fraction form computed
     3·c2·T + c1w·c1p as int64 — at web-scale token totals that product

@@ -72,24 +72,17 @@ _CENT = [(10, [1.0, 0.0]), (11, [0.0, 1.0]), (12, [-1.0, 0.0]),
 _DEGENERATE = {"zero_norm": [0.0, 0.0], "nan_element": [float("nan"), 1.0]}
 
 
-@pytest.mark.parametrize("case", sorted(_DEGENERATE))
-@pytest.mark.parametrize("hier", [False, True], ids=["flat", "hier"])
-def test_degenerate_vector_gets_a_defined_cell(spark, case, hier):
+@pytest.mark.parametrize("case", sorted(_DEGENERATE),
+                         ids=lambda case: f"flat-{case}")
+def test_degenerate_vector_gets_a_defined_cell(spark, case):
     emb = spark.createDataFrame(
         [(0, [0.1, 1.0]), (1, _DEGENERATE[case])],
         "vec_id long, e array<double>")
     cent = spark.createDataFrame(_CENT, "cell long, ce array<double>")
     # every cosine of the degenerate vector ranks -2, so it ties
-    # everywhere: the smallest cell (hier: the smallest live
-    # super-cell, then its smallest child)
-    if hier:
-        assign = A._ivf_assign_hier(emb, cent, branch=2)
-        _, sup_of = A._hier_quantizer(_CENT, 2)
-        first = min(sup_of.values())
-        want = min(c for c, g in sup_of.items() if g == first)
-    else:
-        assign, want = A._ivf_assign(emb, cent), 10
-    assert {r.vec_id: r.cell for r in assign.collect()} == {0: 11, 1: want}
+    # everywhere: the smallest cell
+    assign = A._ivf_assign(emb, cent)
+    assert {r.vec_id: r.cell for r in assign.collect()} == {0: 11, 1: 10}
 
 
 # ---- dedup_span_exact's packed keeper (same r8 SortAggregate fix) ----
@@ -129,9 +122,9 @@ def test_span_exact_packed_equals_struct(spark):
 def test_span_exact_guard_fires_on_huge_doc_id(spark, tmp_path):
     """A doc_id past the 2^41 packing bound must fail loudly, not
     silently elect a wrong keeper.  Two loud layers exist: ANSI mode
-    overflows the packing multiply at exactly doc_id = 2^41 (this
-    test), and the per-output-row raise_error covers the idx < 2^22
-    bound, which no overflow can catch."""
+    overflows the packing multiply at exactly doc_id = 2^41, and the
+    raise_error inside the packed key covers both bounds, including
+    idx < 2^22, which no overflow can catch."""
     from engine.queries import _REGISTRY
 
     big = 1 << 45
@@ -145,3 +138,26 @@ def test_span_exact_guard_fires_on_huge_doc_id(spark, tmp_path):
             Exception,
             match="ARITHMETIC_OVERFLOW|packing bound exceeded"):
         fn(spark, str(tmp_path)).collect()
+
+
+def test_span_exact_guard_survives_doc_id_filter(spark, tmp_path,
+                                                 monkeypatch):
+    """The idx bound is checked where the keeper is elected, not on the
+    violating doc's own output row: with 2 index bits, doc 10's span 4
+    packs to the same key as doc 11's span 0 (10·4 + 4 == 11·4 + 0), so
+    a doc_id filter that pruned doc 10's row would otherwise return
+    doc 11 a silent n_dup_spans = 0 (the right answer is 1)."""
+    from engine.queries import _REGISTRY
+
+    monkeypatch.setattr(A, "_SPAN_IDX_BITS", 2)
+    toks = [f"tok{i}" for i in range(6 * A._SPAN_W)]
+    span4 = toks[4 * A._SPAN_W:5 * A._SPAN_W]
+    spark.createDataFrame(
+        [(10, " ".join(toks), "src00"), (11, " ".join(span4), "src00")],
+        "doc_id long, text string, source string") \
+        .write.parquet(str(tmp_path / "documents.parquet"))
+    fn, _ = _REGISTRY["dedup_span_exact"]
+    for df in (fn(spark, str(tmp_path)),
+               fn(spark, str(tmp_path)).filter("doc_id = 11")):
+        with pytest.raises(Exception, match="packing bound exceeded"):
+            df.collect()

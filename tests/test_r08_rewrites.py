@@ -24,19 +24,17 @@ def _docs(spark):
 
 
 def test_simhash_carry_through_equals_join_back(spark):
-    """_simhash_bands_with_chunks/_simhash_hamming_join == the r7
+    """_hamming_pairs (sketch carried on the band rows) == the r7
     pairs-then-join-the-sketch-back form, including the bucket cap."""
-    chunks = A._simhash128_chunks(_docs(spark))
-    got = {tuple(r) for r in A._simhash_hamming_join(
-        A._simhash_bands_with_chunks(chunks, A._SIMHASH128_CHUNKS),
-        A._SIMHASH128_CHUNKS, max_hamming=6).collect()}
+    chunks = A._simhash_chunks(_docs(spark), 128)
+    got = {tuple(r) for r in A._hamming_pairs(chunks, 6).collect()}
 
     # r7 formulation: capped bands without chunks, distinct pairs,
     # then join the sketch table back per side
     wb = Window.partitionBy("band_id", "band_key").orderBy("doc_id")
     bands = (chunks.select(
         "doc_id", F.posexplode(F.array(*[
-            F.col(f"c{c}") for c in range(A._SIMHASH128_CHUNKS)]))
+            F.col(f"c{c}") for c in range(A._SIMHASH_CHUNKS)]))
         .alias("band_id", "band_key"))
         .withColumn("brn", F.row_number().over(wb))
         .filter(F.col("brn") <= A._SIMHASH_BUCKET_CAP).drop("brn"))
@@ -48,12 +46,12 @@ def test_simhash_carry_through_equals_join_back(spark):
                     F.col("b.doc_id").alias("doc_b")).distinct())
     x = chunks.select(F.col("doc_id").alias("doc_a"),
                       *[F.col(f"c{c}").alias(f"x{c}")
-                        for c in range(A._SIMHASH128_CHUNKS)])
+                        for c in range(A._SIMHASH_CHUNKS)])
     y = chunks.select(F.col("doc_id").alias("doc_b"),
                       *[F.col(f"c{c}").alias(f"y{c}")
-                        for c in range(A._SIMHASH128_CHUNKS)])
+                        for c in range(A._SIMHASH_CHUNKS)])
     ham = sum(F.bit_count(F.expr(f"x{c} ^ y{c}"))
-              for c in range(A._SIMHASH128_CHUNKS))
+              for c in range(A._SIMHASH_CHUNKS))
     want = {tuple(r) for r in
             (cand.join(x, "doc_a").join(y, "doc_b")
              .withColumn("hamming", ham.cast("int"))
